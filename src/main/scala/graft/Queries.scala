@@ -2018,10 +2018,11 @@ object Queries {
         SELECT id, score FROM scored ORDER BY score DESC, id ASC LIMIT 12
       """)),
 
-    // TAIL-FOLD compaction on the live BM25 index — the sparse twin of
-    // a31: postings segments past the first fold into ONE (term-sorted +
-    // bloom, the seek layout preserved) while the init segment is only
-    // REFERENCED by the new manifest — O(tail) write cost. A partial
+    // TAIL-FOLD compaction on the live BM25 index (the shared
+    // SegmentFamily fold, as in a31): postings segments past the first
+    // fold into ONE (term-sorted + bloom, the seek layout preserved)
+    // while the init segment is only REFERENCED by the new manifest —
+    // O(tail) write cost. A partial
     // fold reclaims dead tail postings (the rows the read already
     // filtered) and republishes stats VERBATIM (the family's stale-stats
     // contract: df/n_docs/avgdl catch up only at the full merge), so the

@@ -46,12 +46,17 @@ import graft.search.Bm25
   * (Lucene's exact deleted-doc behavior). Replacing a document is
   * delete + append under the document's next version id.
   */
-object IncrementalBm25 {
+object IncrementalBm25 extends SegmentFamily {
 
   // v2: commit protocol change (stats versions publish via the atomic
   // _COMMITTED marker) — v1 artifacts carry no marker and must not be
   // reused
   val Name = "bm25_inc_v2"
+
+  protected val commitDir = "stats"
+  protected def entryName(k: Int): String = s"seg/$k"
+  protected val segmentKinds = Seq("seg")
+  protected val owner = "bm25"
 
   /** Raw per-(term, doc) postings: corpus-stat-free, safe to freeze. */
   private def postingsOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -61,43 +66,34 @@ object IncrementalBm25 {
       .groupBy(col("term"), col(idCol), col("dl"))
       .agg(count(lit(1)).as("tf"))
 
-  /** Per-delta stat increments: term df plus (n_docs, sum_dl). */
-  private def statsOf(postings: DataFrame, docs: DataFrame,
-                      textCol: String): (DataFrame, DataFrame) = {
-    // postings are distinct on (term, id): count(1) == countDistinct(id)
-    val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val corpus = docs.agg(count(lit(1)).as("n_docs"),
-      sum(size(TextOps.tokens(col(textCol))).cast("long")).as("sum_dl"))
-    (dfreq, corpus)
-  }
-
-  private def statsBase(root: String) = s"$root/stats"
   private def statsDir(root: String, v: Int) =
-    SegmentStore.versionDir(statsBase(root), v)
+    SegmentStore.versionDir(commitBase(root), v)
   private def segDir(root: String, k: Int) = s"$root/seg/$k"
 
-  /** Committed version — [[SegmentStore]] protocol over `stats/` (here
-    * the version dirs CARRY the merged stats parquet: the directory
-    * appears as soon as the write starts, so only the marker commits). */
-  def version(root: String): Int = SegmentStore.version(statsBase(root))
+  /** Merged stats of version `v`: (term df, corpus (n_docs, sum_dl)). */
+  private def readStats(spark: SparkSession, root: String,
+                        v: Int): (DataFrame, DataFrame) =
+    (spark.read.parquet(s"${statsDir(root, v)}/termstats"),
+      spark.read.parquet(s"${statsDir(root, v)}/corpus"))
 
-  // ---- Manifest-addressed segment resolution (tail-fold support) ----
-  // Same design as [[IncrementalIvf]]'s (see the [[SegmentStore]]
-  // manifest section): positional `seg/0..v-1` until the first
-  // [[tailFold]] publishes a manifest inside the stats version dir; the
-  // manifest then IS the postings-segment list, and the stats payload
-  // keeps riding every version as before.
+  /** Stats recomputed from surviving postings — the merge moment where
+    * stale df/n_docs/avgdl catch up. Postings are distinct on (term, id),
+    * so count(1) == countDistinct(id), and (id, dl) pairs are unique per
+    * doc. */
+  private def statsFrom(postings: DataFrame, idCol: String): (DataFrame, DataFrame) =
+    (postings.groupBy(col("term")).agg(count(lit(1)).as("df")),
+      postings.select(col(idCol), col("dl")).distinct()
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl").cast("long")).as("sum_dl")))
 
-  private def entryList(root: String): Seq[SegmentStore.ManifestEntry] =
-    SegmentStore.currentManifest(statsBase(root)) match {
-      case Some(m) => m.entries
-      case None => (0 until version(root))
-        .map(k => SegmentStore.ManifestEntry(s"seg/$k", k.toLong))
-    }
-
-  /** Read fan-in — the read-amplification dial ([[tailFoldIfNeeded]]'s
-    * trigger); the version clock stops reflecting it after folds. */
-  def fanIn(root: String): Int = entryList(root).size
+  /** Write stats into version `v`'s dir; termstats keep the term-sorted
+    * bloom seek layout. */
+  private def writeStats(root: String, v: Int,
+                         stats: (DataFrame, DataFrame)): Unit = {
+    Store.optimizeLayout(stats._1, s"${statsDir(root, v)}/termstats",
+      Seq("term"), 1, bloomCols = Seq("term"))
+    stats._2.coalesce(1).write.mode("overwrite")
+      .parquet(s"${statsDir(root, v)}/corpus")
+  }
 
   /** Operational health of a mutable BM25 root — the gauge that makes
     * the family's STALE-STATS contract operable: deletes/upserts/partial
@@ -114,19 +110,15 @@ object IncrementalBm25 {
     * serving-path one. */
   def stats(spark: SparkSession, root: String,
             idCol: String): Map[String, Long] = {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
-    val statsNDocs = spark.read.parquet(s"${statsDir(root, v)}/corpus")
+    val v = requireLive(root)
+    val statsNDocs = readStats(spark, root, v)._2
       .select(col("n_docs")).head().getLong(0)
-    val liveNDocs = filterTombs(spark, root,
-        readSegsTagged(spark, root, v).select(col(idCol), col("__seg")),
-        idCol)
-      .select(col(idCol)).distinct().count()
-    val nTombs = SegmentStore.tombIds(spark, s"$root/tombs", tombRebase(root))
-      .map(_.count()).getOrElse(0L)
+    val liveNDocs = liveRows(spark, root, idCol).select(col(idCol))
+      .distinct().count()
+    val nTombs = tombIds(spark, root).map(_.count()).getOrElse(0L)
     Map(
       "index_version" -> v.toLong,
-      "tombstone_ledger_version" -> SegmentStore.tombVersion(s"$root/tombs").toLong,
+      "tombstone_ledger_version" -> SegmentStore.tombVersion(tombsBase(root)).toLong,
       "read_fan_in" -> fanIn(root).toLong,
       "n_tombstoned_ids" -> nTombs,
       "stats_n_docs" -> statsNDocs,
@@ -134,76 +126,39 @@ object IncrementalBm25 {
       "stats_drift_docs" -> (statsNDocs - liveNDocs))
   }
 
-  private def tombRebase(root: String): Int =
-    SegmentStore.currentManifest(statsBase(root)).map(_.tombRebase)
-      .getOrElse(0)
-
-  /** Logical number of the NEXT segment — the horizon a delete committed
-    * now carries (strictly above every live posting's tag; see
-    * [[IncrementalIvf.logicalNext]] for the fold-sparing argument). */
-  private def logicalNext(root: String): Long =
-    SegmentStore.currentManifest(statsBase(root)).map(_.nextLogical)
-      .getOrElse(version(root).toLong)
-
   /** Build segment 0 + stats v=1. `tag` is an optional idempotence tag
     * committed atomically with the version (see [[committedHasTag]]). */
   def init(docs: DataFrame, idCol: String, textCol: String, root: String,
            numFiles: Int = 8, tag: Option[String] = None): Unit =
-    writeVersion(docs, idCol, textCol, root, seg = 0, numFiles, tag)
+    initSegment(root, tag)(writeSegment(docs, idCol, textCol, root, numFiles))
 
   /** Append a delta as the next segment and publish merged stats. Doc ids
     * must be new (append-only semantics — see scaladoc). */
   def append(delta: DataFrame, idCol: String, textCol: String, root: String,
-             numFiles: Int = 8, tag: Option[String] = None): Unit = {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized — call init first")
-    writeVersion(delta, idCol, textCol, root, seg = v, numFiles, tag)
-  }
+             numFiles: Int = 8, tag: Option[String] = None): Unit =
+    appendSegment(root, tag)(writeSegment(delta, idCol, textCol, root, numFiles))
 
-  private def writeVersion(docs: DataFrame, idCol: String, textCol: String,
-                           root: String, seg: Int, numFiles: Int,
-                           tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "bm25-append") { // single-writer,
-    val spark = docs.sparkSession                       // checked
-    val v = if (seg == 0) 0 else version(root)
-    val manifest = SegmentStore.currentManifest(statsBase(root))
-    // manifest roots decouple physical dir from the version clock
-    val phys = manifest.map(_.nextPhysical).getOrElse(seg)
-    val postings = postingsOf(docs, idCol, textCol)
-    // segment first — invisible until the matching stats version lands
-    Store.optimizeLayout(postings, segDir(root, phys), Seq("term", idCol),
-      numFiles, bloomCols = Seq("term"))
+  /** Postings segment first, then the merged stats of version v+1 — both
+    * invisible until the version publishes. */
+  private def writeSegment(docs: DataFrame, idCol: String, textCol: String,
+                           root: String, numFiles: Int)(s: SegmentFamily.Slot): Unit = {
+    val spark = docs.sparkSession
+    Store.optimizeLayout(postingsOf(docs, idCol, textCol), segDir(root, s.phys),
+      Seq("term", idCol), numFiles, bloomCols = Seq("term"))
     // re-read what was written: one source of truth for the merge
-    val written = spark.read.parquet(segDir(root, phys))
-    val (dfreq, corpus) = statsOf(written, docs, textCol)
-    val (mergedDf, mergedCorpus) =
-      if (seg == 0) (dfreq, corpus)
+    val dfreq = spark.read.parquet(segDir(root, s.phys))
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val corpus = docs.agg(count(lit(1)).as("n_docs"),
+      sum(size(TextOps.tokens(col(textCol))).cast("long")).as("sum_dl"))
+    writeStats(root, s.v + 1,
+      if (s.v == 0) (dfreq, corpus)
       else {
-        val oldDf = spark.read.parquet(s"${statsDir(root, v)}/termstats")
-        val oldCorpus = spark.read.parquet(s"${statsDir(root, v)}/corpus")
-        (oldDf.unionByName(dfreq).groupBy(col("term"))
-           .agg(sum(col("df")).as("df")),
-         oldCorpus.unionByName(corpus)
-           .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl")))
-      }
-    Store.optimizeLayout(mergedDf, s"${statsDir(root, v + 1)}/termstats",
-      Seq("term"), 1, bloomCols = Seq("term"))
-    mergedCorpus.coalesce(1).write.mode("overwrite")
-      .parquet(s"${statsDir(root, v + 1)}/corpus")
-    // publish: tag first, then the atomic commit marker — the version (and
-    // its tag) become visible in one namespace op, after every artifact
-    // is fully on disk. Manifest roots publish the appended entry in the
-    // SAME atomic step.
-    manifest match {
-      case None => SegmentStore.publish(statsBase(root), v + 1, tag)
-      case Some(m) => SegmentStore.publishManifest(statsBase(root), v + 1, tag,
-        m.copy(
-          entries = m.entries :+ SegmentStore.ManifestEntry(
-            s"seg/${m.nextPhysical}", m.nextLogical),
-          nextLogical = m.nextLogical + 1,
-          nextPhysical = m.nextPhysical + 1))
-    }
-    }
+        val (oldDf, oldCorpus) = readStats(spark, root, s.v)
+        (oldDf.unionByName(dfreq).groupBy(col("term")).agg(sum(col("df")).as("df")),
+          oldCorpus.unionByName(corpus)
+            .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl")))
+      })
+  }
 
   /** Mark documents DELETED — Lucene's exact deleted-doc semantics: the
     * tombstoned doc's postings are excluded from every [[topK]] from this
@@ -213,20 +168,12 @@ object IncrementalBm25 {
     * recomputes the stats from the survivors. That is literally how
     * Lucene serves deletes before a segment merge, and it keeps the
     * pre-compaction read SQL-replayable (whole-corpus stats CTEs +
-    * a tombstone WHERE on the scoring rows — the s3e oracle). Idempotent
-    * via `tag`. */
+    * a tombstone WHERE on the scoring rows — the s3e oracle). A later
+    * re-insert of the same id serves (Lucene delete-then-add).
+    * Idempotent via `tag`. */
   def delete(ids: DataFrame, idCol: String, root: String,
              tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "bm25-delete") {
-      val v = version(root)
-      require(v > 0, s"index at $root not initialized")
-      // horizon = current logical segment number: existing postings die, a
-      // later re-insert of the same id serves (Lucene delete-then-add).
-      // Under the lease a delete never interleaves a fold, so its horizon
-      // can never equal a folded segment's logical number.
-      SegmentStore.tombWrite(ids, idCol, s"$root/tombs", tag,
-        beforeSeg = logicalNext(root))
-    }
+    deleteIds(ids, idCol, root, tag)
 
   /** UPSERT — update a document IN PLACE by id: Lucene's update IS
     * delete + add, and this is exactly that under one idempotence tag —
@@ -240,35 +187,15 @@ object IncrementalBm25 {
     * where the stats catch up. */
   def upsert(delta: DataFrame, idCol: String, textCol: String, root: String,
              numFiles: Int = 8, tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "bm25-upsert") { // nested append
-      val v = version(root)                             // re-enters
-      require(v > 0, s"index at $root not initialized")
-      SegmentStore.tombWrite(delta.select(col(idCol)), idCol,
-        s"$root/tombs", tag.map(t => s"${t}_t"), beforeSeg = logicalNext(root))
-      if (!tag.exists(t => committedHasTag(root, t)))
-        append(delta, idCol, textCol, root, numFiles, tag)
-    }
+    upsertRows(delta, idCol, root, tag)(
+      append(delta, idCol, textCol, root, numFiles, tag))
 
-  /** Union of committed postings segments with per-row LOGICAL segment
-    * provenance (`__seg`) — the horizon the versioned tombstones cut
-    * against. Manifest-aware (the `v` parameter is ignored on manifest
-    * roots — the committed entry list is authoritative there). */
-  private def readSegsTagged(spark: SparkSession, root: String,
-                             v: Int): DataFrame =
-    entryList(root).map(e => spark.read.parquet(s"$root/${e.dir}")
-        .withColumn("__seg", lit(e.logicalSeg)))
-      .reduce(_ unionByName _)
-
-  /** Exclude dead postings: id tombstoned AND the row's segment predates
-    * the tombstone's horizon. `df` must carry `__seg`. Ledger segments a
-    * full fold absorbed are skipped. */
-  private def filterTombs(spark: SparkSession, root: String, df: DataFrame,
-                          idCol: String): DataFrame =
-    SegmentStore.tombIds(spark, s"$root/tombs", tombRebase(root)).fold(df)(t =>
-      df.join(broadcast(t.select(col(t.columns.head).as("__dd"),
-          col("before_seg"))),
-        df(idCol) === col("__dd") && df("__seg") < col("before_seg"),
-        "left_anti"))
+  /** Surviving postings with their logical `__seg`. */
+  private def liveRows(spark: SparkSession, root: String, idCol: String,
+                       es: Seq[SegmentStore.ManifestEntry] = Nil): DataFrame =
+    filterTombs(tombIds(spark, root),
+      tagged(if (es.isEmpty) entries(root) else es)(e =>
+        spark.read.parquet(kindDir(root, "seg", e))), idCol)
 
   /** BM25 top-k across all committed segments, idf/length-norm applied at
     * query time from the merged stats — hash-exact the full-rebuild
@@ -276,15 +203,13 @@ object IncrementalBm25 {
     * [[delete]]). */
   def topK(spark: SparkSession, root: String, idCol: String,
            terms: Seq[String], k: Int): DataFrame = {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
-    val stats = spark.read.parquet(s"${statsDir(root, v)}/corpus")
-      .select(col("n_docs"),
-        (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
-    val dfreq = spark.read.parquet(s"${statsDir(root, v)}/termstats")
-      .where(col("term").isin(terms: _*)) // |terms| rows
-    filterTombs(spark, root,
-        readSegsTagged(spark, root, v)
+    val v = requireLive(root)
+    val (termstats, corpus) = readStats(spark, root, v)
+    val stats = corpus.select(col("n_docs"),
+      (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
+    val dfreq = termstats.where(col("term").isin(terms: _*)) // |terms| rows
+    filterTombs(tombIds(spark, root),
+        tagged(entries(root))(e => spark.read.parquet(kindDir(root, "seg", e)))
           .where(col("term").isin(terms: _*)), // pushed: In(term, ...) + bloom
         idCol)
       .drop("__seg")
@@ -302,196 +227,79 @@ object IncrementalBm25 {
       .limit(k)
   }
 
-  /** Idempotence check for at-least-once writers (streaming foreachBatch
-    * replays the last uncommitted micro-batch after a failure): a writer
-    * passes its batch id as the `tag` of [[init]]/[[append]] — written
-    * inside the stats dir just before the commit marker, so it is
-    * committed atomically with the version — and skips a redelivered
-    * batch whose tag is already visible. A crash before the marker leaves
-    * no committed tag, and the retried append overwrites the orphan
-    * segment at the same number: exactly-once in effect. */
-  def committedHasTag(root: String, tag: String): Boolean = {
+  /** Latest-version idempotence check: a writer passes its batch id as the
+    * `tag` of [[init]]/[[append]] and skips a redelivered batch whose tag
+    * is on the CURRENT version. A crash before the marker leaves no
+    * committed tag, and the retried append overwrites the orphan segment
+    * at the same number: exactly-once in effect. Lifecycle steps and the
+    * streaming loops check every committed version ([[tagCommitted]]),
+    * since one trigger publishes several versions. */
+  override def committedHasTag(root: String, tag: String): Boolean = {
     val v = version(root)
-    v > 0 && SegmentStore.hasTag(statsBase(root), v, tag)
+    v > 0 && SegmentStore.hasTag(commitBase(root), v, tag)
   }
 
   /** Compact all committed segments into a single fresh one. Queries pay
     * one scan task set per segment, so a long-running streaming ingest
     * (one segment per micro-batch) eventually wants its tail folded —
-    * the standard LSM discipline. Stats are already merged (they carry
-    * no per-segment state), so compaction only rewrites postings:
-    * read segments 0..v-1, write the union as the new seg/0 into a fresh
-    * root, re-publish the CURRENT stats as v=1. The result serves
-    * hash-identical scores (postings rows are the same multiset).
-    * Building into `newRoot` keeps the old index readable throughout —
-    * callers swap the root pointer when done (the same publish-last
-    * discipline as [[append]]).
-    */
+    * the standard LSM discipline. Survivors are written as the new seg/0
+    * of a fresh root and the CURRENT stats republish as its v=1 —
+    * recomputed from the survivors when deletes were applied, so the
+    * fresh root serves scores hash-exact a rebuild without the deleted
+    * docs and starts with a clear ledger. Building into `newRoot` keeps
+    * the old index readable throughout — callers swap the root pointer
+    * when done. */
   def compact(spark: SparkSession, root: String, newRoot: String,
               idCol: String, numFiles: Int = 8,
               tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "bm25-compact") {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
-    val tombs = SegmentStore.tombIds(spark, s"$root/tombs")
-    val survivors = filterTombs(spark, root,
-      readSegsTagged(spark, root, v), idCol).drop("__seg")
-    Store.optimizeLayout(survivors,
-      segDir(newRoot, 0), Seq("term", idCol), numFiles,
-      bloomCols = Seq("term"))
-    if (tombs.isEmpty) {
-      // stats carry no per-segment state — republish as-is
-      spark.read.parquet(s"${statsDir(root, v)}/termstats")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(newRoot, 1)}/termstats")
-      spark.read.parquet(s"${statsDir(root, v)}/corpus")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(newRoot, 1)}/corpus")
-    } else {
-      // deletes applied: recompute stats from the surviving postings —
-      // the Lucene-merge moment where stale df/n_docs/avgdl catch up;
-      // the fresh root serves scores hash-exact a rebuild without the
-      // deleted docs, and starts with a clear ledger. Postings are
-      // distinct on (term, id) so count(1) == countDistinct(id), and
-      // (id, dl) pairs are unique per doc.
-      val written = spark.read.parquet(segDir(newRoot, 0))
-      Store.optimizeLayout(
-        written.groupBy(col("term")).agg(count(lit(1)).as("df")),
-        s"${statsDir(newRoot, 1)}/termstats", Seq("term"), 1,
+      val v = requireLive(root)
+      Store.optimizeLayout(liveRows(spark, root, idCol).drop("__seg"),
+        segDir(newRoot, 0), Seq("term", idCol), numFiles,
         bloomCols = Seq("term"))
-      written.select(col(idCol), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl").cast("long")).as("sum_dl"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(newRoot, 1)}/corpus")
-    }
-    SegmentStore.publish(statsBase(newRoot), 1, tag)
+      writeStats(newRoot, 1,
+        if (SegmentStore.tombVersion(tombsBase(root)) == 0) readStats(spark, root, v)
+        else statsFrom(spark.read.parquet(segDir(newRoot, 0)), idCol))
+      SegmentStore.publish(commitBase(newRoot), 1, tag)
     }
 
-  /** Size-tiered auto-compaction trigger — the policy half of the LSM
-    * story: reads fan in over every committed segment, so segment count
-    * is the read-amplification dial. When it exceeds `maxSegments`, fold
-    * into a fresh versioned root (old root readable throughout) and
-    * return the new root for the caller to swap its pointer to;
-    * otherwise return `root` unchanged. The new root's name carries the
-    * source version, so repeated triggers never collide. */
+  /** Size-tiered auto-compaction trigger: when the segment count exceeds
+    * `maxSegments`, fold into a fresh versioned root and return it for
+    * the caller to swap its pointer to; otherwise return `root`. */
   def compactIfNeeded(spark: SparkSession, root: String, idCol: String,
                       maxSegments: Int, tag: Option[String] = None): String =
     SegmentStore.compactIfNeeded(root, version(root), maxSegments)(
       compact(spark, root, _, idCol, tag = tag))
 
-  /** Segment list at committed version `w` — see
-    * [[IncrementalIvf.entryListAt]] (same retain-one-generation GC). */
-  private def entryListAt(root: String, w: Int): Seq[SegmentStore.ManifestEntry] =
-    if (w <= 0) Seq.empty
-    else SegmentStore.manifestAt(statsBase(root), w).map(_.entries)
-      .getOrElse((0 until w).map(k =>
-        SegmentStore.ManifestEntry(s"seg/$k", k.toLong)))
-
-  /** Sweep dirs neither of the LAST TWO committed manifests references —
-    * [[IncrementalIvf.gcUnreferencedSegs]]'s sparse twin: folded-away
-    * tails get a one-generation grace for in-flight readers; crashed
-    * appends' orphans go at the first fold after them. Runs under the
-    * writer lease. */
-  private def gcUnreferencedSegs(root: String): Unit = {
-    val v = version(root)
-    val retained = (entryListAt(root, v) ++ entryListAt(root, v - 1))
-      .map(_.dir.stripPrefix("seg/")).toSet
-    SegmentStore.listChildDirs(s"$root/seg").filterNot(retained)
-      .foreach(c => SegmentStore.deleteTree(s"$root/seg/$c"))
-  }
-
-  /** TAIL-FOLD: fold every postings segment past the first `keep` into
-    * ONE fresh segment IN THIS ROOT — the sparse twin of
-    * [[IncrementalIvf.tailFold]] (same manifest protocol, same horizon
-    * algebra, same O(tail)-not-O(corpus) write cost; see that scaladoc
-    * and docs/PLANS.md). The fold keeps the seek layout (term-sorted +
-    * bloom), so pushed `term IN (...)` pruning survives folds.
+  /** TAIL-FOLD ([[SegmentFamily]]'s reclaiming fold): every postings
+    * segment past the first `keep` folds into ONE fresh segment in this
+    * root, dead postings reclaimed, the term-sorted bloom layout kept so
+    * pushed `term IN (...)` pruning survives folds.
     *
-    * Stats semantics follow the family's delete contract: a PARTIAL fold
-    * (`keep >= 1`) republishes the current stats VERBATIM — physically
-    * reclaiming dead tail postings changes which rows score, exactly
-    * like the read-side tombstone filter did, while df/n_docs/avgdl stay
-    * stale until a full merge (Lucene's deleted docs before a merge). A
-    * FULL fold (`keep = 0`) IS the merge moment: every posting is read
-    * anyway, so stats are recomputed from the survivors and the absorbed
-    * ledger history is rebased away — byte-for-byte the [[compact]]
-    * catch-up, without rewriting a prefix that doesn't exist. */
+    * Stats follow the family's delete contract: a PARTIAL fold
+    * (`keep >= 1`) republishes the current stats VERBATIM — reclaiming
+    * dead tail postings changes which rows score exactly like the
+    * read-side filter did, while df/n_docs/avgdl stay stale until a full
+    * merge. A FULL fold (`keep = 0`) IS the merge moment: stats are
+    * recomputed from the survivors and the absorbed ledger history is
+    * rebased away — the [[compact]] catch-up without a new root. */
   def tailFold(spark: SparkSession, root: String, idCol: String,
                keep: Int = 1, numFiles: Int = 8,
-               tag: Option[String] = None): Unit = {
-    require(keep >= 0, s"keep must be >= 0, got $keep")
-    if (tag.exists(t => committedHasTag(root, t))) return
-    SegmentStore.withWriterLease(root, "bm25-tail-fold") {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
-    gcUnreferencedSegs(root)
-    val entries = entryList(root)
-    if (entries.size <= keep) return // empty tail — nothing to fold
-    val cur = SegmentStore.currentManifest(statsBase(root))
-    val nextPhys = cur.map(_.nextPhysical).getOrElse(v)
-    val nextLog = cur.map(_.nextLogical).getOrElse(v.toLong)
-    val rebase = cur.map(_.tombRebase).getOrElse(0)
-    // ledger clock captured BEFORE the reads it stamps as absorbed —
-    // see [[IncrementalIvf.tailFold]] (same soundness argument)
-    val tombV = SegmentStore.tombVersion(s"$root/tombs")
-    val (prefix, tail) = entries.splitAt(keep)
-    val tailRows = tail.map(e => spark.read.parquet(s"$root/${e.dir}")
-        .withColumn("__seg", lit(e.logicalSeg)))
-      .reduce(_ unionByName _)
-    val live = SegmentStore.tombIds(spark, s"$root/tombs", rebase)
-      .fold(tailRows)(t =>
-        tailRows.join(broadcast(t.select(col(t.columns.head).as("__dd"),
-            col("before_seg"))),
-          tailRows(idCol) === col("__dd") &&
-            tailRows("__seg") < col("before_seg"),
-          "left_anti"))
-      .drop("__seg")
-    Store.optimizeLayout(live, segDir(root, nextPhys), Seq("term", idCol),
-      numFiles, bloomCols = Seq("term"))
-    if (keep == 0) {
-      // the merge moment: stats catch up from the surviving postings
-      val written = spark.read.parquet(segDir(root, nextPhys))
-      Store.optimizeLayout(
-        written.groupBy(col("term")).agg(count(lit(1)).as("df")),
-        s"${statsDir(root, v + 1)}/termstats", Seq("term"), 1,
+               tag: Option[String] = None): Unit =
+    foldTail(root, keep, tag, reorganize = false) { f =>
+      Store.optimizeLayout(liveRows(spark, root, idCol, f.tail).drop("__seg"),
+        segDir(root, f.phys), Seq("term", idCol), numFiles,
         bloomCols = Seq("term"))
-      written.select(col(idCol), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("dl").cast("long")).as("sum_dl"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(root, v + 1)}/corpus")
-    } else {
-      // partial fold: stats stay stale by contract — republish verbatim
-      // (through optimizeLayout so the termstats seek layout survives)
-      Store.optimizeLayout(
-        spark.read.parquet(s"${statsDir(root, v)}/termstats"),
-        s"${statsDir(root, v + 1)}/termstats", Seq("term"), 1,
-        bloomCols = Seq("term"))
-      spark.read.parquet(s"${statsDir(root, v)}/corpus")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(root, v + 1)}/corpus")
+      writeStats(root, f.v + 1,
+        if (keep == 0) statsFrom(spark.read.parquet(segDir(root, f.phys)), idCol)
+        else readStats(spark, root, f.v))
     }
-    val newRebase = if (keep == 0) tombV else rebase
-    SegmentStore.publishManifest(statsBase(root), v + 1, tag,
-      SegmentStore.Manifest(
-        prefix :+ SegmentStore.ManifestEntry(s"seg/$nextPhys", nextLog),
-        nextLogical = nextLog + 1,
-        nextPhysical = nextPhys + 1,
-        tombRebase = newRebase))
-    // no post-publish sweep: folded-away dirs get a one-generation
-    // grace for in-flight readers (gcUnreferencedSegs retain-one rule)
-    }
-  }
 
-  /** Size-tiered trigger for [[tailFold]] — fold on READ fan-in, the
-    * suffix chosen by [[SegmentStore.tieredFoldStart]] (longest
-    * trailing run of similar-size segments; see that scaladoc).
-    * `keep < maxSegments` required and the ladder-fit warning returned —
-    * see [[IncrementalIvf.tailFoldIfNeeded]].
+  /** Size-tiered trigger for [[tailFold]] ([[SegmentFamily]]'s fan-in
+    * trigger; returns the ladder-fit warning).
     *
     * `driftFoldShare` closes the loop from the [[stats]] gauge to an
-    * ACTION (r13 verdict: "stale stats are visible but nothing acts on
-    * them"): when the stale-stats drift share
+    * ACTION: when the stale-stats drift share
     * `stats_drift_docs / stats_n_docs` exceeds the given fraction, this
     * trigger escalates to the FULL merge moment ([[tailFold]] keep=0 —
     * stats recomputed from the surviving postings, drift back to 0)
@@ -504,9 +312,6 @@ object IncrementalBm25 {
                        maxSegments: Int, keep: Int = 1,
                        tag: Option[String] = None,
                        driftFoldShare: Double = 1.0): Option[String] = {
-    require(keep < maxSegments,
-      s"keep ($keep) must be < maxSegments ($maxSegments): the trigger " +
-        "would fold one segment per trigger forever, never reducing fan-in")
     require(driftFoldShare > 0.0 && driftFoldShare <= 1.0,
       s"driftFoldShare must be in (0, 1], got $driftFoldShare " +
         "(1.0 disables the drift check)")
@@ -518,26 +323,34 @@ object IncrementalBm25 {
     if (driftTripped) {
       tailFold(spark, root, idCol, keep = 0, tag = tag)
       None
-    } else {
-      val entries = entryList(root)
-      if (entries.size > maxSegments) {
-        val sizes = entries.map(e => SegmentStore.treeBytes(s"$root/${e.dir}"))
-        tailFold(spark, root, idCol,
-          SegmentStore.tieredFoldStart(sizes, keep, maxSegments), tag = tag)
-        SegmentStore.ladderCheck(sizes, maxSegments)
-      } else None
-    }
+    } else foldIfNeeded(root, maxSegments, keep)(
+      tailFold(spark, root, idCol, _, tag = tag))
   }
 
   /** Ensure an incrementally-GROWN documents index for `dataDir`: half the
     * corpus at init, the rest appended — exercising the real maintenance
     * path while staying oracle-checkable against whole-corpus SQL. */
   def ensure(spark: SparkSession, dataDir: String): String =
-    IndexCatalog.ensure(spark, dataDir, Name) { p =>
-      val all = graft.tables.Tables.documents(spark, dataDir)
-      init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
-      append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
-    }
+    IndexCatalog.ensure(spark, dataDir, Name)(grow(spark, dataDir, _))
+
+  /** Even doc ids at init, odd ones appended — the grown root every
+    * fixture here starts from; returns the documents table. */
+  private def grow(spark: SparkSession, dataDir: String, p: String): DataFrame = {
+    val all = graft.tables.Tables.documents(spark, dataDir)
+    init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
+    append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
+    all
+  }
+
+  /** Every doc with a +1 neighbor, carrying the neighbor's text. */
+  private def neighborTexts(all: DataFrame): DataFrame =
+    all.as("a")
+      .join(all.select(col("doc_id").as("nid"), col("text").as("ntext")),
+        col("a.doc_id") + 1 === col("nid"))
+      .select(col("a.doc_id").as("doc_id"), col("ntext").as("text"))
+
+  private def sevenths(all: DataFrame): DataFrame =
+    all.where(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id"))
 
   val UpsertName = "bm25_upsert_v1"
 
@@ -548,15 +361,9 @@ object IncrementalBm25 {
     * (both versions counted until compaction). */
   def ensureUpserted(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, UpsertName) { p =>
-      val all = graft.tables.Tables.documents(spark, dataDir)
-      init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
-      append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
-      val updated = all.as("a")
-        .join(all.select(col("doc_id").as("nid"), col("text").as("ntext")),
-          col("a.doc_id") + 1 === col("nid"))
-        .where(pmod(col("a.doc_id"), lit(11)) === 5)
-        .select(col("a.doc_id").as("doc_id"), col("ntext").as("text"))
-      upsert(updated, "doc_id", "text", p, tag = Some("demo_upsert"))
+      val all = grow(spark, dataDir, p)
+      upsert(neighborTexts(all).where(pmod(col("doc_id"), lit(11)) === 5),
+        "doc_id", "text", p, tag = Some("demo_upsert"))
     }
 
   val TailFoldName = "bm25_tailfold_v1"
@@ -571,18 +378,11 @@ object IncrementalBm25 {
     * docs. Delete and upsert sets are disjoint so the oracle composes. */
   def ensureTailFolded(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TailFoldName) { p =>
-      val all = graft.tables.Tables.documents(spark, dataDir)
-      init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
-      append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
-      delete(all.where(pmod(col("doc_id"), lit(7)) === 3)
-        .select(col("doc_id")), "doc_id", p, tag = Some("demo_tf_delete"))
-      val updated = all.as("a")
-        .join(all.select(col("doc_id").as("nid"), col("text").as("ntext")),
-          col("a.doc_id") + 1 === col("nid"))
-        .where(pmod(col("a.doc_id"), lit(11)) === 5 &&
-          pmod(col("a.doc_id"), lit(7)) =!= 3)
-        .select(col("a.doc_id").as("doc_id"), col("ntext").as("text"))
-      upsert(updated, "doc_id", "text", p, tag = Some("demo_tf_upsert"))
+      val all = grow(spark, dataDir, p)
+      delete(sevenths(all), "doc_id", p, tag = Some("demo_tf_delete"))
+      upsert(neighborTexts(all).where(pmod(col("doc_id"), lit(11)) === 5 &&
+          pmod(col("doc_id"), lit(7)) =!= 3),
+        "doc_id", "text", p, tag = Some("demo_tf_upsert"))
       tailFold(spark, p, "doc_id", keep = 1, tag = Some("demo_tf_fold"))
     }
 
@@ -594,10 +394,7 @@ object IncrementalBm25 {
     * plain corpus BM25 SQL plus a tombstone WHERE on the result. */
   def ensureTombstoned(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TombName) { p =>
-      val all = graft.tables.Tables.documents(spark, dataDir)
-      init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
-      append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
-      delete(all.where(pmod(col("doc_id"), lit(7)) === 3)
-        .select(col("doc_id")), "doc_id", p, tag = Some("demo_delete"))
+      delete(sevenths(grow(spark, dataDir, p)), "doc_id", p,
+        tag = Some("demo_delete"))
     }
 }

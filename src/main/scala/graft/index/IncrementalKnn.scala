@@ -8,8 +8,8 @@ import graft.functions.VectorOps
 import graft.search.Ann
 import graft.tables.Tables
 
-/** Incrementally-maintainable corpus kNN graph — the graph twin of
-  * [[IncrementalIvf]] (reference analogue: Qdrant inserts points into its
+/** Incrementally-maintainable corpus kNN graph — the graph member of the
+  * [[SegmentFamily]] lifecycle (reference analogue: Qdrant inserts points into its
   * HNSW neighbor graph one delta at a time, `scripts/indexing.py:214-260`;
   * rebuilding a 100 TB corpus graph per nightly delta is the thing a real
   * pipeline can never afford, yet the graph feeds SemDeDup clustering,
@@ -34,10 +34,10 @@ import graft.tables.Tables
   * whole-corpus rebuild. IndexSpec pins grown ≡ rebuilt; the a20 oracle
   * is a18's whole-corpus kNN SQL verbatim.
   *
-  * Layout under `root` (all publishes behind [[IncrementalIvf]]-style
-  * atomic `_COMMITTED` markers, segment written first, marker last):
+  * Layout under `root` (all publishes behind the family's atomic
+  * `_COMMITTED` markers, segment written first, marker last):
   *
-  *   - `centroids/`   frozen at init (same drift caveat as IncrementalIvf).
+  *   - `centroids/`   frozen at init (drift answered by [[retrain]]).
   *   - `assign/<k>/`  batch k's (vec_id, cid, embedding), cid-partitioned.
   *   - `probes/<k>/`  batch k's probe lists, SLIM (src, cid) — nprobe rows
   *                    per vector. Stored rather than re-derived because
@@ -66,7 +66,7 @@ import graft.tables.Tables
   * delta touched, with partition pruning on the slim probe table's cid
   * column. Nothing ever re-scores corpus × corpus.
   */
-object IncrementalKnn {
+object IncrementalKnn extends SegmentFamily {
 
   // v2: edge segments adopted the src-sorted `_srt` seek layout
   // v3: + per-segment `vecs/` (vec_id-sorted seek twin of the one-shot
@@ -81,16 +81,24 @@ object IncrementalKnn {
     * graph artifacts ([[KnnGraphIndex.CoarseMod]]). */
   val CoarseMod = 16
 
-  private def assignDir(root: String, k: Int) = s"$root/assign/$k"
-  private def probesDir(root: String, k: Int) = s"$root/probes/$k"
-  private def edgesDir(root: String, k: Int) = s"$root/edges/$k"
-  private def vecsDir(root: String, k: Int) = s"$root/vecs/$k"
-  private def coarseDir(root: String, k: Int) = s"$root/coarse/$k"
-  private def tombsBase(root: String) = s"$root/tombs"
+  // A manifest entry's `dir` is the segment's bare PHYSICAL NUMBER: the
+  // five per-segment artifact kinds share it (and the GC sweeps them
+  // together). The plain [[tailFold]] is the family's REORGANIZING fold
+  // (see [[SegmentFamily]]): folded rows keep their original logical
+  // `__seg` as a stored column, so tombstone filters, repair-coverage
+  // clocks and the stale-src visible-holes semantics are identical by
+  // construction; dead-row reclamation stays with [[reclaimFold]] and
+  // [[compact]], exactly like Lucene's partial merges vs full.
+  protected val commitDir = "commit"
+  protected def entryName(k: Int): String = k.toString
+  protected val segmentKinds = Seq("assign", "probes", "edges", "vecs", "coarse")
+  protected val owner = "knn"
+  override protected val minKeep = 1
+  override protected def repairVersion(root: String): Int =
+    SegmentStore.version(repairBase(root))
+
   private def repairDir(root: String, k: Int) = s"$root/repairs/seg/$k"
   private def repairBase(root: String) = s"$root/repairs/commit"
-
-  def version(root: String): Int = IncrementalIvf.version(root)
 
   /** The root's full mutation clock — (index segments, tombstone-ledger
     * version, repair-ledger version). Any serving-side cache of resolved
@@ -117,11 +125,10 @@ object IncrementalKnn {
     val (v, tv, rv) = stateVersions(root)
     // backlog = ledger entries past the last reclaiming fold's rebase
     // (entries at or below it are physically baked in — not a backlog)
-    val nTombs = SegmentStore.tombIds(spark, tombsBase(root), tombRebase(root))
-      .map(_.count()).getOrElse(0L)
+    val nTombs = tombIds(spark, root).map(_.count()).getOrElse(0L)
     val nStale = // rv==0 counts too: holes with no repairs are still holes
       if (tv == 0 || repairsCurrent(spark, root)) 0L
-      else staleSrcs(spark, root, v).map(_.count()).getOrElse(0L)
+      else staleSrcs(spark, root).map(_.count()).getOrElse(0L)
     Map("index_version" -> v.toLong, "tombstone_ledger_version" -> tv.toLong,
       "repair_ledger_version" -> rv.toLong, "n_tombstoned_ids" -> nTombs,
       "n_stale_srcs" -> nStale, "tomb_rebase" -> tombRebase(root).toLong,
@@ -132,58 +139,6 @@ object IncrementalKnn {
       "read_fan_in" -> fanIn(root).toLong)
   }
 
-  /** Idempotence check for at-least-once writers — same contract as
-    * [[IncrementalIvf.committedHasTag]] (identical commit layout). */
-  def committedHasTag(root: String, tag: String): Boolean =
-    IncrementalIvf.committedHasTag(root, tag)
-
-  private def publish(root: String, v: Int,
-                      tag: Option[String] = None): Unit =
-    SegmentStore.publish(s"$root/commit", v, tag)
-
-  // ---- Manifest-addressed segment resolution (tail-fold support) ----
-  // Same commit-dir manifest protocol as [[IncrementalIvf]] (see the
-  // [[SegmentStore]] manifest section), with TWO family-specific rules:
-  //
-  //  - a manifest entry's `dir` is the segment's PHYSICAL NUMBER (this
-  //    family has five per-segment artifact kinds — assign/probes/
-  //    edges/vecs/coarse — all sharing the number);
-  //  - a FOLDED segment stores each row's original logical `__seg` as a
-  //    COLUMN (entry `logicalSeg == -1` marks it): the fold is PURE
-  //    reorganization — same rows, same horizons, fewer directories —
-  //    so tombstone filters, repair-coverage clocks, and the stale-src
-  //    visible-holes semantics are identical by construction, with no
-  //    gating on repair state and no interaction with the upsert
-  //    horizon algebra. Dead-row reclamation stays with [[compact]]
-  //    (the deep clean), exactly like Lucene's partial merges vs full.
-
-  private def segEntries(root: String): Seq[SegmentStore.ManifestEntry] =
-    SegmentStore.currentManifest(s"$root/commit") match {
-      case Some(m) => m.entries
-      case None => (0 until version(root))
-        .map(k => SegmentStore.ManifestEntry(k.toString, k.toLong))
-    }
-
-  /** Read fan-in (live segment count) — [[tailFoldIfNeeded]]'s trigger;
-    * the version clock stops reflecting it after the first fold. */
-  def fanIn(root: String): Int = segEntries(root).size
-
-  /** Logical number of the NEXT segment — the horizon a delete or
-    * upsert committed now carries (strictly above every live row's
-    * `__seg`). Equals `version(root)` until the first fold. */
-  private def logicalNext(root: String): Long =
-    SegmentStore.currentManifest(s"$root/commit").map(_.nextLogical)
-      .getOrElse(version(root).toLong)
-
-  /** Ledger version the last [[reclaimFold]] physically absorbed —
-    * readers skip ledger segments at or below it (their kills are baked
-    * into the folded rows; same manifest field as the IVF/BM25 full
-    * folds). 0 until the first reclaiming fold: the plain [[tailFold]]
-    * is pure reorganization and never advances it. */
-  private def tombRebase(root: String): Int =
-    SegmentStore.currentManifest(s"$root/commit").map(_.tombRebase)
-      .getOrElse(0)
-
   /** Repair-ledger version the last [[reclaimFold]] absorbed — readers
     * skip repair segments at or below it. NOT hygiene: those segments'
     * stale rows (superseded by later upserts) were suppressed by exactly
@@ -191,34 +146,23 @@ object IncrementalKnn {
     * would resurrect pre-upsert scores; the covered refills they DID
     * contribute are baked into the folded edges. */
   private def repairRebase(root: String): Int =
-    SegmentStore.currentManifest(s"$root/commit").map(_.repairRebase)
-      .getOrElse(0)
+    manifest(root).map(_.repairRebase).getOrElse(0)
 
-  /** Union of committed segments of one artifact KIND, each row tagged
-    * with its logical `__seg` — from the manifest entry for plain
-    * segments, from the stored column for folded ones. `dir` maps a
-    * physical number to the kind's path. */
-  private def readEntriesTagged(spark: SparkSession, root: String)
-                               (dir: String => String): DataFrame =
-    segEntries(root).map { e =>
-      val df = spark.read.parquet(dir(e.dir))
-      if (e.logicalSeg >= 0) df.withColumn("__seg", lit(e.logicalSeg))
-      else df // folded mixed-horizon segment: __seg is a stored column
-    }.reduce(_ unionByName _)
+  /** Union of committed segments of one artifact KIND with their logical
+    * `__seg` (default: every committed segment). */
+  private def kindRows(spark: SparkSession, root: String, kind: String,
+                       es: Seq[SegmentStore.ManifestEntry] = Nil): DataFrame =
+    tagged(if (es.isEmpty) entries(root) else es)(e =>
+      spark.read.parquet(kindDir(root, kind, e)))
 
-  /** [[readEntriesTagged]] over per-segment FRAMES (vecs/coarse, which
-    * need the pre-v3 fallback probe per physical segment). */
-  private def readFramesEntriesTagged(root: String)
-                                     (seg: String => DataFrame): DataFrame =
-    segEntries(root).map { e =>
-      val df = seg(e.dir)
-      if (e.logicalSeg >= 0) df.withColumn("__seg", lit(e.logicalSeg))
-      else df
-    }.reduce(_ unionByName _)
+  /** [[kindRows]] of one kind with dead rows dropped on `cols`. */
+  private def liveKind(spark: SparkSession, root: String, kind: String,
+                       cols: String*): DataFrame =
+    filterTombs(tombIds(spark, root), kindRows(spark, root, kind), cols: _*)
+      .drop("__seg")
 
   private def readCentroids(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(s"$root/centroids")
-
 
   /** Top-`nprobe` centroid ids per vector — the same probe rule as
     * [[Ann.knnGraph]] (cosine desc, cid asc). Slim output (src, cid). */
@@ -234,6 +178,10 @@ object IncrementalKnn {
       .select(col("src"), col("cid"))
   }
 
+  private def writeAssign(assign: DataFrame, path: String): Unit =
+    assign.write.mode(SaveMode.Overwrite).option("compression", "zstd")
+      .partitionBy("cid").parquet(path)
+
   /** Edge-segment writer — the `_srt` seek layout ([[KnnGraphIndex]]):
     * range-partitioned + sorted by `src`, 1 MiB parquet row groups, so
     * every file and row group carries a tight min/max `src` range and a
@@ -247,17 +195,16 @@ object IncrementalKnn {
       .option("parquet.block.size", (1 << 20).toString)
       .parquet(path)
 
-  /** Serving-side vector segments: the batch's (vec_id, embedding) in the
-    * vec_id-sorted small-row-group layout the seek walk's pushed
-    * `vec_id IN (...)` lookups prune ([[KnnGraphIndex]] `vectors/`), plus
-    * the mod-[[CoarseMod]] coarse entry subset as its own artifact (the
-    * pmod predicate can't prune row groups, so without it every query's
-    * entry selection reads the whole merged vector set —
-    * [[graft.search.Ann.hierEntriesFrom]] scaladoc). Both are delta-sized
-    * writes; the embedding copy is the same build-once serving trade the
-    * one-shot artifacts make. */
-  private def writeVecs(vectors: DataFrame, root: String, seg: String): Unit = {
-    val slim = vectors.select(col("vec_id"), col("embedding"))
+  /** Serving-side vector segments: the batch's (vec_id, embedding) — plus
+    * `__seg` on a reorganizing fold — in the vec_id-sorted small-row-group
+    * layout the seek walk's pushed `vec_id IN (...)` lookups prune
+    * ([[KnnGraphIndex]] `vectors/`), plus the mod-[[CoarseMod]] coarse
+    * entry subset as its own artifact (the pmod predicate can't prune row
+    * groups, so without it every query's entry selection reads the whole
+    * merged vector set — [[graft.search.Ann.hierEntriesFrom]] scaladoc).
+    * Both are delta-sized writes; the embedding copy is the same
+    * build-once serving trade the one-shot artifacts make. */
+  private def writeVecs(slim: DataFrame, root: String, seg: String): Unit = {
     slim.repartitionByRange(8, col("vec_id"))
       .sortWithinPartitions(col("vec_id"))
       .write.mode(SaveMode.Overwrite)
@@ -268,6 +215,19 @@ object IncrementalKnn {
       .sortWithinPartitions(col("vec_id"))
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$root/coarse/$seg")
+  }
+
+  /** One whole segment built from scratch over `vectors` (batch 0 of
+    * [[init]], a [[retrain]] root): assignment, probes, the plain kNN
+    * graph of the vectors, and the serving vectors. */
+  private def writeBuilt(vectors: DataFrame, cent: DataFrame, root: String,
+                         seg: Int, nprobe: Int, k: Int): Unit = {
+    writeAssign(Ann.ivfAssign(vectors, cent), s"$root/assign/$seg")
+    probeLists(vectors, cent, nprobe)
+      .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$seg")
+    writeEdges(Ann.knnGraph(vectors, cent, nprobe, k)
+      .select(col("src"), col("dst"), col("score")), s"$root/edges/$seg")
+    writeVecs(vectors.select(col("vec_id"), col("embedding")), root, seg.toString)
   }
 
   /** Per-src top-k reduction of a candidate edge set — the safe partial
@@ -284,39 +244,24 @@ object IncrementalKnn {
     * + edges (arm 1 over itself = the plain kNN graph of the batch). */
   def init(vectors: DataFrame, centroids: DataFrame, root: String,
            nprobe: Int, k: Int): Unit =
-    SegmentStore.withWriterLease(root, "knn-init") {
-    val spark = vectors.sparkSession
-    centroids.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/centroids")
-    val cent = readCentroids(spark, root)
-    Ann.ivfAssign(vectors, cent)
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(assignDir(root, 0))
-    probeLists(vectors, cent, nprobe)
-      .write.mode(SaveMode.Overwrite).parquet(probesDir(root, 0))
-    writeEdges(Ann.knnGraph(vectors, cent, nprobe, k)
-      .select(col("src"), col("dst"), col("score")), edgesDir(root, 0))
-    writeVecs(vectors, root, "0")
-    publish(root, 1)
+    initSegment(root, None) { s =>
+      centroids.coalesce(1).write.mode(SaveMode.Overwrite)
+        .parquet(s"$root/centroids")
+      writeBuilt(vectors, readCentroids(vectors.sparkSession, root), root,
+        s.phys, nprobe, k)
     }
 
   /** Append a delta of new vectors: one new assignment/probes/edges
     * segment, candidate arms as documented above. Vec ids must be new
-    * (append-only; replacement needs tombstone + [[compact]]). */
+    * (append-only; replacement is [[upsert]]). */
   def append(delta: DataFrame, root: String, nprobe: Int, k: Int,
              tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "knn-append") {
+    appendSegment(root, tag) { s =>
     val spark = delta.sparkSession
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized — call init first")
     val cent = readCentroids(spark, root)
-    val cur = SegmentStore.currentManifest(s"$root/commit")
-    val phys = cur.map(_.nextPhysical.toString).getOrElse(v.toString)
-    val logical = cur.map(_.nextLogical).getOrElse(v.toLong)
+    val phys = s.phys.toString
 
-    val newAssign = Ann.ivfAssign(delta, cent)
-    newAssign.write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(s"$root/assign/$phys")
+    writeAssign(Ann.ivfAssign(delta, cent), s"$root/assign/$phys")
     probeLists(delta, cent, nprobe)
       .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$phys")
 
@@ -326,11 +271,12 @@ object IncrementalKnn {
     // heals holes that exist when it runs). Horizon-aware, so an
     // upserted id participates through its CURRENT row only. No-op on
     // tombstone-free roots (the grown ≡ rebuilt pins are unaffected).
+    val tombs = tombIds(spark, root)
     val newSeg = spark.read.parquet(s"$root/assign/$phys")
-    val assignAll = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/assign/$p")
-        .unionByName(newSeg.withColumn("__seg", lit(logical))),
-      Seq("vec_id"))
+    val assignAll = filterTombs(tombs,
+      kindRows(spark, root, "assign")
+        .unionByName(newSeg.withColumn("__seg", lit(s.logical))),
+      "vec_id")
       .drop("__seg") // old + this batch
 
     // arm 1 — new src probes the entire assignment so far (covers pairs
@@ -351,8 +297,7 @@ object IncrementalKnn {
     // arm 2 — every PRIOR vector whose probe lists intersect the delta's
     // assigned lists gains the delta's vectors as candidates. Probes are
     // slim; the src embedding joins back from the prior assign segments.
-    val oldProbes = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/probes/$p"), Seq("src"))
+    val oldProbes = filterTombs(tombs, kindRows(spark, root, "probes"), "src")
       .drop("__seg")
     val cand2 = oldProbes.join(newSeg.select(col("cid"), col("vec_id").as("dst"),
         col("embedding").as("dvec")), Seq("cid"))
@@ -360,8 +305,7 @@ object IncrementalKnn {
     // horizon-filtered too: an upserted src must contribute its CURRENT
     // embedding exactly once (the stale row would both mis-score and
     // duplicate the pair)
-    val oldAssign = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/assign/$p"), Seq("vec_id"))
+    val oldAssign = filterTombs(tombs, kindRows(spark, root, "assign"), "vec_id")
       .drop("__seg")
     val arm2 = cand2.join(oldAssign.select(col("vec_id").as("src"),
         col("embedding").as("svec")), Seq("src"))
@@ -369,25 +313,9 @@ object IncrementalKnn {
         round(VectorOps.cosineSim(col("svec"), col("dvec")), 6).as("score"))
 
     writeEdges(topKPerSrc(arm1.unionByName(arm2), k), s"$root/edges/$phys")
-    writeVecs(delta, root, phys)
-    cur match {
-      case None => publish(root, v + 1, tag)
-      case Some(m) => SegmentStore.publishManifest(s"$root/commit", v + 1, tag,
-        m.copy(
-          entries = m.entries :+ SegmentStore.ManifestEntry(phys, logical),
-          nextLogical = logical + 1,
-          nextPhysical = m.nextPhysical + 1))
-    }
+    writeVecs(delta.select(col("vec_id"), col("embedding")), root, phys)
     }
 
-  /** The merged graph: union of all committed edge segments, one window
-    * top-k per src — hash-exact the whole-corpus [[Ann.knnGraph]] rebuild
-    * against the same centroids. Schema (src, dst, score, rank). With
-    * tombstones present, edges touching a deleted vector are excluded
-    * AFTER the rank window (see [[delete]]): survivors keep their
-    * original ranks — holes mark the degraded degree — so the result is
-    * exactly the rebuild SQL plus a final tombstone WHERE (the a28
-    * oracle). */
   /** Committed repair rows with their index horizon as `__seg` and the
     * observed-ledger stamp `tomb_v` (0 for segments written before the
     * stamp existed — treated as "observed nothing", so one re-repair
@@ -463,11 +391,10 @@ object IncrementalKnn {
     * None when the ledger is empty. The scan is one columnar pass over
     * the edge rows against the broadcast tombstone set; the result is
     * bounded by the un-repaired backlog's reverse degree. */
-  private def staleSrcs(spark: SparkSession, root: String,
-                        v: Int): Option[DataFrame] =
+  private def staleSrcs(spark: SparkSession, root: String): Option[DataFrame] =
     SegmentStore.tombIdsVersioned(spark, tombsBase(root), tombRebase(root))
       .map { tombs =>
-      val baseRows = readEntriesTagged(spark, root)(p => s"$root/edges/$p")
+      val baseRows = kindRows(spark, root, "edges")
         .withColumn("tomb_v", lit(0L)) // stored rows carry no stamp
       val rows = repairRows(spark, root).fold(baseRows)(baseRows.unionByName(_))
       val idc = tombs.columns.head
@@ -483,26 +410,32 @@ object IncrementalKnn {
           .na.fill(0L, Seq("covT")))
       // live-src filter (see scaladoc): one slim tombstone-filtered scan
       // of the per-segment id column — maintenance/detection cost only
-      val liveIds = filterTombs(spark, root,
-          readFramesEntriesTagged(root)(vecsSegment(spark, root, _))
-            .select(col("vec_id"), col("__seg")), Seq("vec_id"))
+      val liveIds = filterTombs(tombIds(spark, root),
+          tagged(entries(root))(e => vecsSegment(spark, root, e.dir))
+            .select(col("vec_id"), col("__seg")), "vec_id")
         .select(col("vec_id").as("src")).distinct()
       covered.where(col("covT") < col("needT")).select(col("src"))
         .join(liveIds, Seq("src"), "left_semi")
     }
 
+  /** The merged graph: union of all committed edge segments, one window
+    * top-k per src — hash-exact the whole-corpus [[Ann.knnGraph]] rebuild
+    * against the same centroids. Schema (src, dst, score, rank). With
+    * tombstones present, edges touching a deleted vector are excluded
+    * AFTER the rank window (see [[delete]]): survivors keep their
+    * original ranks — holes mark the degraded degree — so the result is
+    * exactly the rebuild SQL plus a final tombstone WHERE (the a28
+    * oracle). */
   def edges(spark: SparkSession, root: String, k: Int): DataFrame = {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
-    val base = readEntriesTagged(spark, root)(p => s"$root/edges/$p")
+    requireLive(root)
+    val base = kindRows(spark, root, "edges")
     // tombstone set materialized ONCE per read (tiny — bounded by
     // compaction cadence): the optimizer pushes the (src, dst)
     // anti-joins below the segment UNION, so an inline ledger aggregate
     // re-plans per union arm (2 joins × segments broadcast builds, each
     // with its own ledger shuffle — 8 in the r16 a29 before-plan);
     // pinned to in-memory blocks, every arm shares one trivial build.
-    val tombs = SegmentStore.tombIds(spark, tombsBase(root), tombRebase(root))
-      .map(_.localCheckpoint())
+    val tombs = tombIds(spark, root).map(_.localCheckpoint())
     // repair segments refill post-delete/post-upsert rank holes (see
     // [[repair]]); their rows carry their OWN write horizon (`at_seg` —
     // the index version the repair scored against), so a later upsert of
@@ -526,9 +459,9 @@ object IncrementalKnn {
       .orderBy(col("score").desc, col("dst").asc)
     val out = rep match {
       case None =>
-        filterTombsWith(tombs,
+        filterTombs(tombs,
           base.withColumn("rank", row_number().over(w))
-            .where(col("rank") <= k), Seq("src", "dst"))
+            .where(col("rank") <= k), "src", "dst")
           .drop("__seg")
       case Some(r) =>
         // Repairs-current fast path (the steady a29/a30 serving state):
@@ -544,7 +477,7 @@ object IncrementalKnn {
         val stale: Option[DataFrame] =
           if (repairsCurrent(spark, root)) None
           else {
-            val s = staleSrcs(spark, root, v)
+            val s = staleSrcs(spark, root)
               .getOrElse(base.select(col("src")).limit(0))
               .localCheckpoint()
             if (s.isEmpty) None else Some(s)
@@ -558,7 +491,7 @@ object IncrementalKnn {
         // ONE exchange for dedup + rank: hashing by src satisfies both
         // the (src, dst) aggregate's clustering and the rank window's —
         // the default plan paid two shuffles ((src,dst), then src)
-        val covered = filterTombsWith(tombs, coveredRows, Seq("src", "dst"))
+        val covered = filterTombs(tombs, coveredRows, "src", "dst")
           .repartition(col("src"))
           .groupBy(col("src"), col("dst")).agg(max(col("score")).as("score"))
           .withColumn("rank", row_number().over(w))
@@ -573,8 +506,7 @@ object IncrementalKnn {
               .withColumn("rank", row_number().over(w))
               .where(col("rank") <= k)
             covered.unionByName(
-              filterTombsWith(tombs, staleRanked, Seq("src", "dst"))
-                .drop("__seg"))
+              filterTombs(tombs, staleRanked, "src", "dst").drop("__seg"))
         }
     }
     out.orderBy(col("src"), col("rank"))
@@ -602,11 +534,9 @@ object IncrementalKnn {
              tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "knn-repair") {
     val rb = repairBase(root)
-    if (tag.exists(t => (1 to SegmentStore.version(rb))
-          .exists(rv => SegmentStore.hasTag(rb, rv, t)))) return
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
-    if (SegmentStore.tombIds(spark, tombsBase(root), tombRebase(root)).isEmpty)
+    if (tag.exists(SegmentStore.anyCommittedHasTag(rb, _))) return
+    requireLive(root)
+    if (tombIds(spark, root).isEmpty)
       return // no backlog past the last reclaiming fold — nothing to heal
     if (repairsCurrent(spark, root))
       return // every ledger entry already observed by the newest repair
@@ -621,7 +551,7 @@ object IncrementalKnn {
     // never bump the index version. Cost: the dead-row scan is one
     // columnar pass, the repair set is bounded by the tombstone
     // backlog's reverse degree — compaction resets both.
-    val repairSrcs = staleSrcs(spark, root, v).get
+    val repairSrcs = staleSrcs(spark, root).get
     val holed = vectorsAll(spark, root)
       .select(col("vec_id").as("src"), col("embedding").as("svec"))
       .join(repairSrcs, Seq("src"), "left_semi")
@@ -631,15 +561,10 @@ object IncrementalKnn {
     // full CURRENT candidate set for exactly those srcs: stored probe
     // lists ∩ horizon-filtered assignment (an upserted id participates
     // through its current row only)
-    val probes = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/probes/$p"), Seq("src"))
-      .drop("__seg")
-    val assignLive = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/assign/$p"), Seq("vec_id"))
-      .drop("__seg")
-    val cand = holed.join(probes, Seq("src"))
-      .join(assignLive.select(col("cid"), col("vec_id").as("dst"),
-        col("embedding").as("dvec")), Seq("cid"))
+    val cand = holed.join(liveKind(spark, root, "probes", "src"), Seq("src"))
+      .join(liveKind(spark, root, "assign", "vec_id")
+        .select(col("cid"), col("vec_id").as("dst"), col("embedding").as("dvec")),
+        Seq("cid"))
       .where(col("dst") =!= col("src"))
       .select(col("src"), col("dst"),
         round(VectorOps.cosineSim(col("svec"), col("dvec")), 6).as("score"))
@@ -668,93 +593,31 @@ object IncrementalKnn {
   /** Mark vectors DELETED — the missing half of the CRUD story the
     * reference serves (its point delete/update endpoints remove vectors
     * from the live HNSW; `app/api/endpoints/` CRUD routes). Semantics are
-    * Lucene/Qdrant mark-and-filter: a tombstone segment commits under its
-    * own versioned ledger (same marker protocol — ids first, marker
-    * last), every read-side frame excludes tombstoned ids from that
-    * moment on, and [[compact]] physically reclaims the rows and clears
-    * the ledger. Until a REBUILD, edges that pointed AT a deleted vector
-    * are dropped rather than refilled — the per-src rank keeps its holes,
-    * a visible (and documented) degree-degradation signal, exactly like
-    * Lucene's deleted docs not refilling posting tops until merge.
-    * Append-arms stay unfiltered: candidate edges into deleted vectors
-    * are generated and then filtered at read, which keeps the grown ≡
-    * rebuilt exactness argument intact for the SURVIVING pairs and keeps
-    * the oracle replayable (full kNN SQL + final tombstone WHERE).
-    * Idempotent via `tag` like [[append]] (at-least-once deleters replay
-    * safely). */
+    * Lucene/Qdrant mark-and-filter: every read-side frame excludes
+    * tombstoned ids from that moment on, and [[compact]] physically
+    * reclaims the rows and clears the ledger. Until a [[repair]], edges
+    * that pointed AT a deleted vector are dropped rather than refilled —
+    * the per-src rank keeps its holes, a visible (and documented)
+    * degree-degradation signal, exactly like Lucene's deleted docs not
+    * refilling posting tops until merge. A future re-insert of the same
+    * id (a new document, or [[upsert]]'s new version) serves from its own
+    * segment on. Idempotent via `tag`. */
   def delete(ids: DataFrame, root: String, tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "knn-delete") {
-      val v = version(root)
-      require(v > 0, s"knn graph at $root not initialized")
-      // horizon = the current NEXT logical number: every EXISTING row of
-      // the id dies, and a future re-insert of the same id (a new
-      // document, or [[upsert]]'s new version) serves from its own segment
-      // on — the Lucene delete-then-add semantics. Under the lease a
-      // delete never interleaves a fold, so its horizon can never equal
-      // a folding segment's logical number.
-      SegmentStore.tombWrite(ids, "vec_id", tombsBase(root), tag,
-        beforeSeg = logicalNext(root))
-    }
+    deleteIds(ids, "vec_id", root, tag)
 
   /** UPSERT — update points IN PLACE by id (the reference's Qdrant
-    * upsert overwrites a point; until now this family required
-    * delete + re-insert under a fresh id). Two steps under the caller's
-    * idempotence tag: a VERSIONED tombstone (`before_seg` = the current
-    * segment count — rows of earlier segments are dead, the re-insert's
-    * segment serves) followed by a plain [[append]] of the new vectors
-    * under the SAME ids. Stale candidate pairs (scored against the old
-    * embedding) die at read like delete-tombstoned ones — holes until
-    * [[repair]], which restores rebuild-with-current-vectors exactness
-    * (the a30 oracle states it in SQL). Append-arm coverage makes the
-    * current pairs complete: the new vectors probe everything (arm 1)
-    * and every prior src gains them as candidates (arm 2). */
+    * upsert overwrites a point): a VERSIONED tombstone kills the old
+    * rows, then a plain [[append]] of the new vectors under the SAME ids.
+    * Stale candidate pairs (scored against the old embedding) die at
+    * read like delete-tombstoned ones — holes until [[repair]], which
+    * restores rebuild-with-current-vectors exactness (the a30 oracle
+    * states it in SQL). Append-arm coverage makes the current pairs
+    * complete: the new vectors probe everything (arm 1) and every prior
+    * src gains them as candidates (arm 2). */
   def upsert(delta: DataFrame, root: String, nprobe: Int, k: Int,
              tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "knn-upsert") { // nested append
-      val v = version(root)                            // re-enters
-      require(v > 0, s"knn graph at $root not initialized")
-      SegmentStore.tombWrite(delta.select(col("vec_id")), "vec_id",
-        tombsBase(root), tag.map(t => s"${t}_t"), beforeSeg = logicalNext(root))
-      if (!tag.exists(t => committedHasTag(root, t)))
-        append(delta, root, nprobe, k, tag)
-    }
+    upsertRows(delta, "vec_id", root, tag)(append(delta, root, nprobe, k, tag))
 
-  /** Union of per-segment reads with each row tagged by its segment
-    * index (`__seg`) — the provenance the versioned tombstones cut
-    * against. */
-  /** Exclude dead rows from `df` on `cols` (broadcast anti-joins — the
-    * tombstone set is bounded by compaction cadence, never
-    * corpus-sized). A row is dead when its id is tombstoned AND the row's
-    * segment predates the tombstone's horizon (`__seg < before_seg`) —
-    * plain deletes carry horizon Long.MaxValue, so every version dies;
-    * an upsert's bounded horizon spares the re-inserted segment. `df`
-    * must carry `__seg` ([[readEntriesTagged]]). */
-  private def filterTombs(spark: SparkSession, root: String, df: DataFrame,
-                          cols: Seq[String]): DataFrame =
-    filterTombsWith(
-      SegmentStore.tombIds(spark, tombsBase(root), tombRebase(root)), df, cols)
-
-  /** [[filterTombs]] against a caller-materialized tombstone set —
-    * multi-consumer reads ([[edges]]) resolve the ledger once and share
-    * it. The per-join build uses FIXED aliases so every anti-join's
-    * broadcast subtree is canonically identical and the exchange is
-    * built once and reused, instead of once per pushed-down union arm. */
-  private def filterTombsWith(tombs: Option[DataFrame], df: DataFrame,
-                              cols: Seq[String]): DataFrame =
-    tombs.fold(df) { t =>
-      cols.foldLeft(df) { (d, c) =>
-        val tt = broadcast(t.select(col(t.columns.head).as("__tomb_id"),
-          col("before_seg").as("__tomb_bs")))
-        d.join(tt, d(c) === tt("__tomb_id") && d("__seg") < tt("__tomb_bs"),
-          "left_anti")
-      }
-    }
-
-  /** Merged serving vectors (vec_id, embedding): union of the per-segment
-    * vec_id-sorted `vecs/` artifacts — every file keeps its tight min/max
-    * vec_id ranges, so a pushed `vec_id IN (...)` seek reads O(lookups)
-    * row groups per segment ([[graft.search.Ann.graphTopKSeek]]'s
-    * vectors side for a GROWN graph). */
   /** Per-segment `vecs/` read with the PRE-v3 fallback: roots written
     * before `knn_inc_v3` (e.g. long-lived streaming `knnIngest` roots,
     * which are not keyed by the bumped [[Name]]) have no serving-side
@@ -784,206 +647,117 @@ object IncrementalKnn {
         .where(pmod(col("vec_id"), lit(CoarseMod)) === lit(0))
         .select(col("vec_id"), col("embedding"))
 
-  def vectorsAll(spark: SparkSession, root: String): DataFrame = {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
-    filterTombs(spark, root,
-      readFramesEntriesTagged(root)(vecsSegment(spark, root, _))
-        .select(col("vec_id"), col("embedding"), col("__seg")),
-      Seq("vec_id"))
+  /** Live (vec_id, embedding) rows of per-segment frames `seg`. */
+  private def liveVectors(spark: SparkSession, root: String)
+                         (seg: String => DataFrame): DataFrame = {
+    requireLive(root)
+    filterTombs(tombIds(spark, root),
+      tagged(entries(root))(e => seg(e.dir))
+        .select(col("vec_id"), col("embedding"), col("__seg")), "vec_id")
       .drop("__seg")
   }
+
+  /** Merged serving vectors (vec_id, embedding): union of the per-segment
+    * vec_id-sorted `vecs/` artifacts — every file keeps its tight min/max
+    * vec_id ranges, so a pushed `vec_id IN (...)` seek reads O(lookups)
+    * row groups per segment ([[graft.search.Ann.graphTopKSeek]]'s
+    * vectors side for a GROWN graph). */
+  def vectorsAll(spark: SparkSession, root: String): DataFrame =
+    liveVectors(spark, root)(vecsSegment(spark, root, _))
 
   /** Merged coarse entry layer (vec_id % [[CoarseMod]] == 0 subset) —
     * 1/[[CoarseMod]] of the corpus as I/O for entry selection, exactly
     * like the one-shot artifacts' `coarse/`. */
-  def coarseAll(spark: SparkSession, root: String): DataFrame = {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
-    filterTombs(spark, root,
-      readFramesEntriesTagged(root)(coarseSegment(spark, root, _))
-        .select(col("vec_id"), col("embedding"), col("__seg")),
-      Seq("vec_id"))
-      .drop("__seg")
+  def coarseAll(spark: SparkSession, root: String): DataFrame =
+    liveVectors(spark, root)(coarseSegment(spark, root, _))
+
+  /** Bake every committed kill into physical segment `seg` of `dest`:
+    * tombstone-filtered assign/probes/vecs/coarse and the covered merged
+    * edges (repair refills folded in, ranks recomputed at read) — the
+    * shared body of [[compact]] and [[reclaimFold]]. */
+  private def writeReclaimed(spark: SparkSession, root: String, dest: String,
+                             seg: String, k: Int): Unit = {
+    writeAssign(liveKind(spark, root, "assign", "vec_id")
+      .select(col("vec_id"), col("embedding"), col("cid")), s"$dest/assign/$seg")
+    liveKind(spark, root, "probes", "src").select(col("src"), col("cid"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$dest/probes/$seg")
+    writeEdges(edges(spark, root, k)
+      .select(col("src"), col("dst"), col("score")), s"$dest/edges/$seg")
+    writeVecs(vectorsAll(spark, root), dest, seg) // re-sorts the fold
   }
 
-  /** Fold all segments into a fresh single-segment root (read-merged
-    * edges, unioned assignment/probes/vecs/coarse, centroids
-    * republished) — the LSM tail-fold bounding read-side fan-in; old
-    * root readable throughout. Tombstoned rows are physically dropped
-    * (assign/probes/vecs/coarse by id, edges via the already-filtered
-    * read) and the new root starts with a CLEAR tombstone ledger — the
+  /** Fold all segments into a fresh single-segment root — the deep clean
+    * bounding read-side fan-in with the old root readable throughout:
+    * centroids republished, every kill baked in ([[writeReclaimed]]), and
+    * the new root starts with CLEAR tombstone and repair ledgers — the
     * reclamation half of [[delete]]'s mark-and-filter, same as a Lucene
     * segment merge. */
   def compact(spark: SparkSession, root: String, newRoot: String,
               k: Int, tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "knn-compact") {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
-    readCentroids(spark, root).coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$newRoot/centroids")
-    filterTombs(spark, root,
-        readEntriesTagged(spark, root)(p => s"$root/assign/$p"), Seq("vec_id"))
-      .drop("__seg")
-      .select(col("vec_id"), col("embedding"), col("cid"))
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(assignDir(newRoot, 0))
-    filterTombs(spark, root,
-        readEntriesTagged(spark, root)(p => s"$root/probes/$p"), Seq("src"))
-      .drop("__seg")
-      .select(col("src"), col("cid"))
-      .write.mode(SaveMode.Overwrite).parquet(probesDir(newRoot, 0))
-    writeEdges(edges(spark, root, k) // tombstone-filtered read
-      .select(col("src"), col("dst"), col("score")), edgesDir(newRoot, 0))
-    writeVecs(vectorsAll(spark, root), newRoot, "0") // re-sorts the fold
-    publish(newRoot, 1, tag)
+      requireLive(root)
+      readCentroids(spark, root).coalesce(1).write.mode(SaveMode.Overwrite)
+        .parquet(s"$newRoot/centroids")
+      writeReclaimed(spark, root, newRoot, "0", k)
+      SegmentStore.publish(commitBase(newRoot), 1, tag)
     }
 
-  /** Size-tiered auto-compaction trigger (see
-    * [[IncrementalBm25.compactIfNeeded]] — same policy, same pointer-swap
-    * contract): fold when edge-segment fan-in exceeds `maxSegments`,
-    * return the root to read from. */
+  /** Size-tiered auto-compaction trigger: fold when the segment count
+    * exceeds `maxSegments`, return the root to read from. */
   def compactIfNeeded(spark: SparkSession, root: String, k: Int,
                       maxSegments: Int, tag: Option[String] = None): String =
     SegmentStore.compactIfNeeded(root, version(root), maxSegments)(
       compact(spark, root, _, k, tag = tag))
 
-  private val SegKinds = Seq("assign", "probes", "edges", "vecs", "coarse")
-
-  /** Segment list at committed version `w` — the GC's previous-manifest
-    * view (see [[IncrementalIvf.entryListAt]]). */
-  private def segEntriesAt(root: String, w: Int): Seq[SegmentStore.ManifestEntry] =
-    if (w <= 0) Seq.empty
-    else SegmentStore.manifestAt(s"$root/commit", w).map(_.entries)
-      .getOrElse((0 until w).map(k =>
-        SegmentStore.ManifestEntry(k.toString, k.toLong)))
-
-  /** Retain-one-generation sweep across all five artifact kinds —
-    * [[IncrementalIvf.gcUnreferencedSegs]]'s graph twin: dirs referenced
-    * by NEITHER of the last two committed manifests go; folded-away
-    * tails get one fold generation of grace for in-flight readers. Runs
-    * under the writer lease. */
-  private def gcUnreferencedSegs(root: String): Unit = {
-    val v = version(root)
-    val retained = (segEntriesAt(root, v) ++ segEntriesAt(root, v - 1))
-      .map(_.dir).toSet
-    SegKinds.foreach { kind =>
-      SegmentStore.listChildDirs(s"$root/$kind").filterNot(retained)
-        .foreach(c => SegmentStore.deleteTree(s"$root/$kind/$c"))
-    }
-  }
-
-  /** TAIL-FOLD for the graph family: fold every segment past the first
-    * `keep` into ONE fresh physical segment (all five artifact kinds) IN
-    * THIS ROOT — O(tail) write cost, the prefix only referenced (see
-    * [[IncrementalIvf.tailFold]] and docs/PLANS.md for the general
-    * design). Family-specific rule: the fold is PURE REORGANIZATION —
-    * every folded row keeps its original logical `__seg` as a STORED
-    * column (the manifest marks the segment mixed-horizon), so the row
+  /** TAIL-FOLD for the graph family — [[SegmentFamily]]'s REORGANIZING
+    * fold: every segment past the first `keep` (at least one is kept;
+    * full in-root reclamation is [[reclaimFold]]) folds into ONE fresh
+    * physical segment of all five artifact kinds IN THIS ROOT, each row
+    * keeping its original logical `__seg` as a STORED column, so the row
     * multiset, every tombstone horizon cut, the repair-coverage clock
     * comparisons, and the stale-src visible-holes semantics are
     * byte-identical to the unfolded root. No gating on repair state, no
     * ledger rewrite, no reduction: dead rows and below-top-k rows fold
-    * through unchanged (the read-side merge already handles both), and
-    * their physical reclamation stays with [[compact]] — Lucene's
-    * partial-merge vs full-merge split. The folded edge/vecs/coarse
-    * artifacts keep their seek layouts (src- and vec_id-sorted, small
-    * row groups), so the serving walk's pushed `IN` lookups prune on
-    * folded segments exactly as on grown ones. */
+    * through unchanged (the read-side merge already handles both). The
+    * folded edge/vecs/coarse artifacts keep their seek layouts, so the
+    * serving walk's pushed `IN` lookups prune on folded segments exactly
+    * as on grown ones. */
   def tailFold(spark: SparkSession, root: String, keep: Int = 1,
                tag: Option[String] = None): Unit = {
-    require(keep >= 1,
+    require(keep >= minKeep,
       "knn tail-fold keeps at least one segment — full in-root " +
         "reclamation is reclaimFold() (repairs-current gate) or compact()")
-    if (tag.exists(t => committedHasTag(root, t))) return
-    SegmentStore.withWriterLease(root, "knn-tail-fold") {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
-    gcUnreferencedSegs(root)
-    val entries = segEntries(root)
-    if (entries.size <= keep) return // empty tail — nothing to fold
-    val cur = SegmentStore.currentManifest(s"$root/commit")
-    val nextPhys = cur.map(_.nextPhysical).getOrElse(v)
-    val nextLog = cur.map(_.nextLogical).getOrElse(v.toLong)
-    val rebase = cur.map(_.tombRebase).getOrElse(0)
-    val (prefix, tail) = entries.splitAt(keep)
-    def tagged(read: String => DataFrame): DataFrame =
-      tail.map { e =>
-        val df = read(e.dir)
-        if (e.logicalSeg >= 0) df.withColumn("__seg", lit(e.logicalSeg))
-        else df // already mixed-horizon: __seg is stored
-      }.reduce(_ unionByName _)
-    val p = nextPhys.toString
-    tagged(d => spark.read.parquet(s"$root/assign/$d"))
-      .select(col("vec_id"), col("embedding"), col("__seg"), col("cid"))
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(s"$root/assign/$p")
-    tagged(d => spark.read.parquet(s"$root/probes/$d"))
-      .select(col("src"), col("cid"), col("__seg"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$p")
-    writeEdges(tagged(d => spark.read.parquet(s"$root/edges/$d"))
-      .select(col("src"), col("dst"), col("score"), col("__seg")),
-      s"$root/edges/$p")
-    val vecsFold = tagged(d => vecsSegment(spark, root, d))
-      .select(col("vec_id"), col("embedding"), col("__seg"))
-    vecsFold.repartitionByRange(8, col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", (1 << 20).toString)
-      .parquet(s"$root/vecs/$p")
-    vecsFold.where(pmod(col("vec_id"), lit(CoarseMod)) === lit(0))
-      .repartitionByRange(2, col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/coarse/$p")
-    SegmentStore.publishManifest(s"$root/commit", v + 1, tag,
-      SegmentStore.Manifest(
-        prefix :+ SegmentStore.ManifestEntry(p, -1L),
-        nextLogical = nextLog, // unchanged: the fold consumes no number
-        nextPhysical = nextPhys + 1,
-        tombRebase = rebase))
-    // no post-publish sweep: folded-away dirs get one fold generation of
-    // grace for in-flight readers (gcUnreferencedSegs retain-one rule)
+    foldTail(root, keep, tag, reorganize = true) { f =>
+      val p = f.phys.toString
+      writeAssign(kindRows(spark, root, "assign", f.tail)
+        .select(col("vec_id"), col("embedding"), col("__seg"), col("cid")),
+        s"$root/assign/$p")
+      kindRows(spark, root, "probes", f.tail)
+        .select(col("src"), col("cid"), col("__seg"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$p")
+      writeEdges(kindRows(spark, root, "edges", f.tail)
+        .select(col("src"), col("dst"), col("score"), col("__seg")),
+        s"$root/edges/$p")
+      writeVecs(tagged(f.tail)(e => vecsSegment(spark, root, e.dir))
+        .select(col("vec_id"), col("embedding"), col("__seg")), root, p)
     }
   }
 
-  /** Size-tiered trigger for [[tailFold]] — fold on READ fan-in, the
-    * suffix chosen by [[SegmentStore.tieredFoldStart]] over the
-    * five-kind segment byte totals (edges + assign dominate).
-    * `keep < maxSegments` required and the ladder-fit warning returned —
-    * see [[IncrementalIvf.tailFoldIfNeeded]]. */
+  /** Size-tiered trigger for [[tailFold]] over the five-kind segment byte
+    * totals (edges + assign dominate); returns the ladder-fit warning. */
   def tailFoldIfNeeded(spark: SparkSession, root: String, maxSegments: Int,
                        keep: Int = 1,
-                       tag: Option[String] = None): Option[String] = {
-    require(keep < maxSegments,
-      s"keep ($keep) must be < maxSegments ($maxSegments): the trigger " +
-        "would fold one segment per trigger forever, never reducing fan-in")
-    val entries = segEntries(root)
-    if (entries.size > maxSegments) {
-      val sizes = segmentSizes(root)
-      tailFold(spark, root,
-        math.max(SegmentStore.tieredFoldStart(sizes, keep, maxSegments), 1),
-        tag)
-      SegmentStore.ladderCheck(sizes, maxSegments)
-    } else None
-  }
+                       tag: Option[String] = None): Option[String] =
+    foldIfNeeded(root, maxSegments, keep)(tailFold(spark, root, _, tag))
 
-  /** Per-live-segment byte totals across the five artifact kinds — the
-    * size input of the fold ladder and of [[SegmentStore.ladderCheck]]
-    * (admin-route observability). Order matches the manifest entry
-    * list. */
-  def segmentSizes(root: String): Seq[Long] =
-    segEntries(root).map(e =>
-      SegKinds.map(k => SegmentStore.treeBytes(s"$root/$k/${e.dir}")).sum)
-
-  /** RECLAIMING full fold — bake every committed kill into ONE fresh
-    * segment IN THIS ROOT and REBASE the tombstone ledger, the graph
-    * family's missing lever between [[tailFold]] (pure reorganization —
-    * dead rows and ledger history fold through untouched, growing with
-    * churn) and [[compact]] (a full new root + pointer swap). After a
-    * sustained churn the ledger's broadcast anti-join input is the cost
-    * that grows without bound; this bounds it in place: the root path
-    * never moves, the ledger's version clock never resets, readers just
-    * skip everything at or below the manifest's new `tombRebase`.
+  /** RECLAIMING full fold — [[SegmentFamily]]'s reclaiming fold with
+    * keep = 0: bake every committed kill into ONE fresh segment IN THIS
+    * ROOT and REBASE the tombstone and repair ledgers, the graph family's
+    * lever between [[tailFold]] (pure reorganization — dead rows and
+    * ledger history fold through untouched, growing with churn) and
+    * [[compact]] (a full new root + pointer swap). The root path never
+    * moves, the ledgers' version clocks never reset, readers just skip
+    * everything at or below the manifest's rebases.
     *
     * GATED ON REPAIRS-CURRENT (`n_stale_srcs == 0` — [[stats]]'s one
     * alertable number): baking freezes the current served top-k as the
@@ -992,83 +766,40 @@ object IncrementalKnn {
     * src as needing repair is physically gone — [[staleSrcs]] could
     * never detect it again). With repairs current, every src's served
     * top-k IS the rebuild-over-survivors top-k (the a29/a33 oracles), so
-    * freezing it loses nothing: the fold writes
-    *   - assign/probes/vecs/coarse: tombstone-filtered unions (kills
-    *     physically dropped),
-    *   - edges: the covered merged read ([[edges]] — repair refills
-    *     folded in, ranks recomputed at read),
-    * all under ONE fresh logical number (every surviving row is current
-    * as of the fold — uniform horizon, no stored `__seg` column), so a
-    * post-fold delete/upsert kills folded rows normally with its higher
-    * horizon. The REPAIR ledger rebases with the tombstone ledger
-    * (`repairRebase` — readers skip absorbed repair segments): their
-    * covered refills are IN the folded edges, and their stale rows
-    * (superseded by pre-fold upserts) were suppressed by exactly the
-    * tombstone entries the fold absorbed — merging them back would
-    * resurrect pre-upsert scores (the twin test caught it). Write cost
-    * is O(live corpus) like any full fold — schedule at the deep-clean
-    * cadence, not per batch. Idempotent via `tag`; runs under the
-    * writer lease. */
+    * freezing it loses nothing. Every surviving row is current as of the
+    * fold (uniform horizon, no stored `__seg`), so a post-fold
+    * delete/upsert kills folded rows normally. The repair ledger MUST
+    * rebase with the tombstone ledger: covered refills are IN the folded
+    * edges, and stale repair rows (superseded by pre-fold upserts) were
+    * suppressed by exactly the tombstone entries the fold absorbed —
+    * merging them back would resurrect pre-upsert scores. Write cost is
+    * O(live corpus) like any full fold — schedule at the deep-clean
+    * cadence, not per batch. Idempotent via `tag`. */
   def reclaimFold(spark: SparkSession, root: String, k: Int,
-                  tag: Option[String] = None): Unit = {
-    if (tag.exists(t => committedHasTag(root, t))) return
-    SegmentStore.withWriterLease(root, "knn-reclaim-fold") {
-      val v = version(root)
-      require(v > 0, s"knn graph at $root not initialized")
-      gcUnreferencedSegs(root)
+                  tag: Option[String] = None): Unit =
+    foldTail(root, 0, tag, reorganize = false, "reclaim-fold") { f =>
       val staleN =
         if (repairsCurrent(spark, root)) 0L
-        else staleSrcs(spark, root, v).map(_.count()).getOrElse(0L)
+        else staleSrcs(spark, root).map(_.count()).getOrElse(0L)
       require(staleN == 0L,
         s"reclaiming fold refused: $staleN srcs have unrepaired holes " +
           "(n_stale_srcs > 0) — baking kills now would freeze them as " +
           "silent truncation; run repair() first")
-      // ledger clocks captured BEFORE the reads they stamp as absorbed
-      val tombV = SegmentStore.tombVersion(tombsBase(root))
-      val repairV = SegmentStore.version(repairBase(root))
-      val cur = SegmentStore.currentManifest(s"$root/commit")
-      val nextPhys = cur.map(_.nextPhysical).getOrElse(v)
-      val nextLog = cur.map(_.nextLogical).getOrElse(v.toLong)
-      val p = nextPhys.toString
-      filterTombs(spark, root,
-          readEntriesTagged(spark, root)(d => s"$root/assign/$d"), Seq("vec_id"))
-        .drop("__seg")
-        .select(col("vec_id"), col("embedding"), col("cid"))
-        .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-        .partitionBy("cid").parquet(s"$root/assign/$p")
-      filterTombs(spark, root,
-          readEntriesTagged(spark, root)(d => s"$root/probes/$d"), Seq("src"))
-        .drop("__seg")
-        .select(col("src"), col("cid"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$p")
-      writeEdges(edges(spark, root, k) // covered merged read, repairs baked
-        .select(col("src"), col("dst"), col("score")), s"$root/edges/$p")
-      writeVecs(vectorsAll(spark, root), root, p) // re-sorts the fold
-      SegmentStore.publishManifest(s"$root/commit", v + 1, tag,
-        SegmentStore.Manifest(
-          Seq(SegmentStore.ManifestEntry(p, nextLog)),
-          nextLogical = nextLog + 1,
-          nextPhysical = nextPhys + 1,
-          tombRebase = tombV,
-          repairRebase = repairV))
-      // folded-away dirs: one-generation grace, same as tailFold
+      writeReclaimed(spark, root, root, f.phys.toString, k)
     }
-  }
 
   /** Centroid RETRAIN for the graph family — the production answer to
-    * the frozen-centroid drift caveat ([[IncrementalIvf.retrain]]'s graph
-    * twin): re-fit kmeans on the CURRENT live vectors (tombstone-
-    * filtered), then rebuild assignment/probes/edges against the new
-    * centroids into a fresh single-segment root — the one operation that
-    * IS a rebuild by definition (new centroids change every candidate
-    * list), done at the operator's chosen cadence rather than forced per
-    * delta. Old root readable throughout; callers swap the pointer. The
-    * result serves exactly [[Ann.knnGraph]] over the live vectors against
-    * the re-fit centroids (IndexSpec pins it). */
+    * the frozen-centroid drift caveat: re-fit kmeans on the CURRENT live
+    * vectors (tombstone-filtered), then rebuild assignment/probes/edges
+    * against the new centroids into a fresh single-segment root — the
+    * one operation that IS a rebuild by definition (new centroids change
+    * every candidate list), done at the operator's chosen cadence rather
+    * than forced per delta. Old root readable throughout; callers swap
+    * the pointer. The result serves exactly [[Ann.knnGraph]] over the
+    * live vectors against the re-fit centroids (IndexSpec pins it). */
   def retrain(spark: SparkSession, root: String, newRoot: String,
               numCentroids: Int, nprobe: Int, k: Int): Unit =
     SegmentStore.withWriterLease(root, "knn-retrain") {
-    require(version(root) > 0, s"knn graph at $root not initialized")
     val live = vectorsAll(spark, root)
     val assembled = live.withColumn("features",
       org.apache.spark.ml.functions.array_to_vector(col("embedding")))
@@ -1080,16 +811,8 @@ object IncrementalKnn {
       .select(col("cid"), col("cvec").cast("array<float>").as("cvec"))
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$newRoot/centroids")
-    val cent = readCentroids(spark, newRoot)
-    Ann.ivfAssign(live, cent)
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(assignDir(newRoot, 0))
-    probeLists(live, cent, nprobe)
-      .write.mode(SaveMode.Overwrite).parquet(probesDir(newRoot, 0))
-    writeEdges(Ann.knnGraph(live, cent, nprobe, k)
-      .select(col("src"), col("dst"), col("score")), edgesDir(newRoot, 0))
-    writeVecs(live, newRoot, "0")
-    publish(newRoot, 1)
+    writeBuilt(live, readCentroids(spark, newRoot), newRoot, 0, nprobe, k)
+    SegmentStore.publish(commitBase(newRoot), 1, None)
     }
 
   /** Incrementally-GROWN whole-corpus graph for `dataDir` (thirds: init +
@@ -1098,18 +821,33 @@ object IncrementalKnn {
     * vectors 0..9, the engine-independent choice). */
   def ensure(spark: SparkSession, dataDir: String,
              nprobe: Int = 3, k: Int = 5): String =
-    IndexCatalog.ensure(spark, dataDir, Name) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
-    }
+    IndexCatalog.ensure(spark, dataDir, Name)(grow(spark, dataDir, _, nprobe, k))
 
-  // deterministic demo deletion set for the oracle-checked tombstone
-  // read (a28): every 7th-mod-3 vector — spread across all three
-  // segments and both edge endpoints
+  /** The thirds build every fixture here starts from; returns the
+    * embeddings table. */
+  private def grow(spark: SparkSession, dataDir: String, p: String,
+                   nprobe: Int, k: Int): DataFrame = {
+    val emb = Tables.embeddings(spark, dataDir)
+    val centroids = emb.where(col("vec_id") < 10)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
+    append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
+    append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
+    emb
+  }
+
+  /** [[grow]] plus the demo deletion set (every vector with
+    * vec_id % 7 == 3 — spread across all three segments and both edge
+    * endpoints); with `repaired`, the holes are then repaired. */
+  private def growDeleted(spark: SparkSession, dataDir: String, p: String,
+                          nprobe: Int, k: Int, repaired: Boolean): DataFrame = {
+    val emb = grow(spark, dataDir, p, nprobe, k)
+    delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
+      .select(col("vec_id")), p, tag = Some("demo_delete"))
+    if (repaired) repair(spark, p, nprobe, k, tag = Some("demo_repair"))
+    emb
+  }
+
   val TombName = "knn_tomb_v1"
 
   /** [[ensure]]'s grown graph with a committed tombstone segment on top
@@ -1118,16 +856,8 @@ object IncrementalKnn {
     * final tombstone WHERE, holes in `rank` preserved. */
   def ensureTombstoned(spark: SparkSession, dataDir: String,
                        nprobe: Int = 3, k: Int = 5): String =
-    IndexCatalog.ensure(spark, dataDir, TombName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
-    }
+    IndexCatalog.ensure(spark, dataDir, TombName)(
+      growDeleted(spark, dataDir, _, nprobe, k, repaired = false))
 
   // v2: repair segments carry their write horizon (`at_seg`) so upserts
   // can kill stale repair rows
@@ -1150,12 +880,7 @@ object IncrementalKnn {
   def ensureUpserted(spark: SparkSession, dataDir: String,
                      nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, UpsertName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
+      val emb = grow(spark, dataDir, p, nprobe, k)
       val updated = emb.as("a")
         .join(emb.select(col("vec_id").as("nid"),
           col("embedding").as("nemb")), col("a.vec_id") + 1 === col("nid"))
@@ -1176,15 +901,7 @@ object IncrementalKnn {
   def ensureTailFolded(spark: SparkSession, dataDir: String,
                        nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, TailFoldName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
-      repair(spark, p, nprobe, k, tag = Some("demo_repair"))
+      growDeleted(spark, dataDir, p, nprobe, k, repaired = true)
       tailFold(spark, p, keep = 1, tag = Some("demo_tf_fold"))
     }
 
@@ -1199,15 +916,7 @@ object IncrementalKnn {
   def ensureReclaimFolded(spark: SparkSession, dataDir: String,
                           nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, ReclaimName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
-      repair(spark, p, nprobe, k, tag = Some("demo_repair"))
+      growDeleted(spark, dataDir, p, nprobe, k, repaired = true)
       reclaimFold(spark, p, k, tag = Some("demo_reclaim"))
     }
 
@@ -1226,15 +935,7 @@ object IncrementalKnn {
   def ensureReclaimDegraded(spark: SparkSession, dataDir: String,
                             nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, ReclaimDegradedName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
-      repair(spark, p, nprobe, k, tag = Some("demo_repair"))
+      val emb = growDeleted(spark, dataDir, p, nprobe, k, repaired = true)
       reclaimFold(spark, p, k, tag = Some("demo_reclaim"))
       // the degraded window: a second delete, repair deliberately absent
       delete(emb.where(pmod(col("vec_id"), lit(11)) === 4)
@@ -1247,15 +948,6 @@ object IncrementalKnn {
     * centroids unchanged), ranks dense — a rebuild nobody had to run. */
   def ensureRepaired(spark: SparkSession, dataDir: String,
                      nprobe: Int = 3, k: Int = 5): String =
-    IndexCatalog.ensure(spark, dataDir, RepairName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
-      repair(spark, p, nprobe, k, tag = Some("demo_repair"))
-    }
+    IndexCatalog.ensure(spark, dataDir, RepairName)(
+      growDeleted(spark, dataDir, _, nprobe, k, repaired = true))
 }

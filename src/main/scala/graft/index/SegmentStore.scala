@@ -5,8 +5,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE versioned-segment commit protocol shared by every incremental
-  * index ([[IncrementalIvf]], [[IncrementalBm25]], [[IncrementalKnn]]) —
-  * previously three private copies of the same state machine (reference
+  * index ([[IncrementalIvf]], [[IncrementalBm25]], [[IncrementalKnn]],
+  * whose common lifecycle on top of it is [[SegmentFamily]]) (reference
   * analogue: Qdrant's collection segments publish through one storage
   * layer, not one per index type, `scripts/indexing.py:214-260`).
   *
@@ -549,43 +549,39 @@ object SegmentStore {
 
   // ---- Manifest-addressed segment lists (the tail-fold enabler) ----
   //
-  // The positional layout (`seg/0..v-1`, version = segment count) makes
-  // every compaction a FULL fold: the new root must contain every byte,
-  // including the large old prefix that didn't change — O(corpus) write
-  // cost per fold, the classic size-tiered-vs-full-merge gap that
-  // dominates write amplification at 100 TB (docs/PLANS.md records the
-  // analysis). A MANIFEST breaks position = identity: a committed
-  // version can carry an explicit segment list (physical dir +
-  // per-segment logical horizon number), so a tail-fold publishes one
-  // small folded segment plus one small manifest and the untouched
-  // prefix is REFERENCED, not rewritten.
+  // A committed version may carry a MANIFEST: the explicit segment list
+  // (root-relative physical dir + logical horizon number per entry) plus
+  // the clocks the horizon algebra needs. It is the storage half of the
+  // one segment lifecycle every incremental family runs
+  // ([[SegmentFamily]] — the shared contract is documented there; the
+  // families differ only in commit base, entry naming, segment schema,
+  // fold body and delete semantics). Without a manifest a root reads
+  // positionally (entry k = physical segment k, logical number k, for
+  // k < version); the first tail-fold publishes one, and from then on
+  // it IS the segment list, so a fold publishes one small folded segment
+  // plus one small manifest and the untouched prefix is REFERENCED, not
+  // rewritten — O(tail) instead of O(corpus) write cost per fold
+  // (docs/PLANS.md records the write-amplification analysis).
   //
-  // Design constraints honored here:
-  //  - ONE atomic step per mutation: the manifest payload lives INSIDE
-  //    the commit version dir (`commit/v=N/manifest`, like setPointer's
-  //    `root` payload) and publishes under the same single `_COMMITTED`
-  //    marker as the version's idempotence tag — no second marker, no
-  //    torn append-vs-manifest state, `version()` semantics unchanged.
-  //  - NO ledger rewrite on fold: the folded segment takes logical
-  //    number `nextLogical` — ABOVE every tombstone horizon committed so
-  //    far — so existing ledger entries spare the folded rows (their
-  //    kills are baked into the fold) while still killing prefix rows
-  //    (`seg < horizon` unchanged there), and post-fold deletes use a
-  //    yet-higher horizon that correctly kills folded rows. Logical
-  //    numbers are not positions; they only feed the horizon algebra.
-  //  - Ledger REBASE on full folds: a fold that consumed EVERY segment
-  //    baked every tombstone in, so the manifest records the ledger
-  //    version it absorbed (`tombRebase`) and readers skip ledger
-  //    segments below it — bounding the broadcast anti-join input
-  //    without deleting ledger history (the version clock never resets).
-  //
-  // A root without a committed manifest reads positionally, exactly as
-  // before — manifests appear at the first tail-fold, so existing roots
-  // and write paths are untouched until they opt in.
+  // Format rules every family relies on:
+  //  - ONE atomic step per mutation: the payload lives INSIDE the commit
+  //    version dir (`<base>/v=N/manifest`, like setPointer's `root`
+  //    payload) and publishes under the same single `_COMMITTED` marker
+  //    as the version's idempotence tag — no second marker, no torn
+  //    append-vs-manifest state, `version()` semantics unchanged;
+  //  - logical numbers are not positions; they only feed the horizon
+  //    algebra (a row dies when its id is tombstoned and its `__seg` is
+  //    below the tombstone's horizon), and an entry with logical number
+  //    -1 stores each row's `__seg` as a column (a reorganized fold);
+  //  - physical numbers are never reused, so folded-away dirs can be
+  //    swept without racing a retry;
+  //  - rebases only grow: readers skip tombstone and repair ledger
+  //    segments at or below them, and the ledgers' version clocks never
+  //    reset.
 
-  /** One manifest segment entry: `dir` is root-relative, `logicalSeg`
-    * is the row horizon tag ([[graft.index.IncrementalIvf]] reads tag
-    * rows `__seg = logicalSeg`). */
+  /** One manifest segment entry: `dir` is root-relative (`seg/<n>`, or a
+    * bare `<n>` shared by several artifact kinds), `logicalSeg` is the
+    * horizon its rows read as `__seg` (-1: stored per row). */
   final case class ManifestEntry(dir: String, logicalSeg: Long)
 
   /** A committed segment list. `nextLogical` numbers the next append
@@ -901,8 +897,8 @@ object SegmentStore {
       // least one full trigger ago, since this sweep runs at trigger
       // START and swaps commit at trigger END — so a serving frame
       // planned against it before the swap has had the whole trigger
-      // interval to collect: the pointer-swap twin of the tail-folds'
-      // retain-one-generation GC ([[gcUnreferencedSegs]]' policy).
+      // interval to collect: the pointer-swap counterpart of the
+      // tail-folds' retain-one-generation GC ([[SegmentFamily]]).
       // Idempotent and O(1) when already reclaimed (one exists-probe).
       val prev = if (pv == 1) defaultRoot else readPointer(pointerBase, pv - 1)
       if (prev != cur) retire(prev)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.index.{IncrementalBm25, IncrementalIvf, IncrementalKnn, SegmentFamily, SegmentStore, TfIdfGraphIndex}
+
 /** Structured Streaming operators (reference §2.10: the delta-import dir
   * N2 and checkpointed progress N4, made real streams).
   *
@@ -61,20 +63,23 @@ object DeltaStream {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Start `stream` with `f` applied to every micro-batch (and its batch
+    * id), progress checkpointed at `checkpoint`. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)
+                       (f: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(f)
+      .outputMode(OutputMode.Update())
+      .start()
+
   /** N2: stream new JSON files from a delta directory; each micro-batch is
     * handed to `merge` (e.g. Lifecycle.deltaDetect + parquet upsert). */
   def deltaImport(spark: SparkSession, deltaDir: String, checkpoint: String,
                   schema: org.apache.spark.sql.types.StructType)
                  (merge: (DataFrame, Long) => Unit): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("multiLine", "true")
-      .json(deltaDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(merge)
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(spark.readStream.schema(schema).option("multiLine", "true")
+      .json(deltaDir), checkpoint)(merge)
 
   /** Watermarked tumbling-window counts over an event stream:
     * (window, event_type) → n, sum_value. Late data beyond the watermark
@@ -115,14 +120,10 @@ object DeltaStream {
     * retrain or widen the LM if the stream drifts. */
   def curationIngest(docs: DataFrame, lp: DataFrame, checkpoint: String)
                     (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.functions.CorpusStats.curationVerdictWithLm(batch, lp),
-          batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      sink(graft.functions.CorpusStats.curationVerdictWithLm(batch, lp),
+        batchId)
+    }
 
   /** Streaming NEAR-dup gate at ingest: every micro-batch is MinHash-
     * banded (`Dedup.minhashBands` — same signatures as the batch d3
@@ -144,42 +145,38 @@ object DeltaStream {
   def lshDedupIngest(docs: DataFrame, bandStore: String, checkpoint: String,
                      n: Int = 3)
                     (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = graft.dedup.Dedup.minhashBands(batch, "doc_id", "text", n)
-          .localCheckpoint() // three consumers below; bands are tiny (4/doc)
-        val stored =
-          try spark.read.parquet(bandStore).select(col("band_id"), col("band"))
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            spark.emptyDataFrame.select(lit(0).as("band_id"), lit("").as("band"))
-              .limit(0) }
-        val hitStore = fresh.join(stored, Seq("band_id", "band"), "left_semi")
-          .select(col("doc_id"))
-        // intra-batch: a band's keeper is its min doc_id (partial-agg min,
-        // skew-immune); every other doc holding that band drops.
-        val intraLosers = fresh
-          .join(fresh.groupBy(col("band_id"), col("band"))
-              .agg(min(col("doc_id")).as("keeper")),
-            Seq("band_id", "band"))
-          .where(col("doc_id") =!= col("keeper"))
-          .select(col("doc_id"))
-        val dropIds = hitStore.union(intraLosers).distinct()
-        val survivors = batch.join(dropIds, Seq("doc_id"), "left_anti")
-        // One file per micro-batch append (band rows are 4/doc — tiny):
-        // a steady stream would otherwise shed shuffle-partition-many
-        // small files per trigger and the store's read side would choke
-        // on file count long before data size. Periodic `Store.compact`
-        // on the band store is the long-run answer; coalesce keeps the
-        // interval between compactions long.
-        fresh.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .coalesce(1)
-          .write.mode("append").parquet(bandStore)
-        sink(survivors, batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val fresh = graft.dedup.Dedup.minhashBands(batch, "doc_id", "text", n)
+        .localCheckpoint() // three consumers below; bands are tiny (4/doc)
+      val stored =
+        try spark.read.parquet(bandStore).select(col("band_id"), col("band"))
+        catch { case _: org.apache.spark.sql.AnalysisException =>
+          spark.emptyDataFrame.select(lit(0).as("band_id"), lit("").as("band"))
+            .limit(0) }
+      val hitStore = fresh.join(stored, Seq("band_id", "band"), "left_semi")
+        .select(col("doc_id"))
+      // intra-batch: a band's keeper is its min doc_id (partial-agg min,
+      // skew-immune); every other doc holding that band drops.
+      val intraLosers = fresh
+        .join(fresh.groupBy(col("band_id"), col("band"))
+            .agg(min(col("doc_id")).as("keeper")),
+          Seq("band_id", "band"))
+        .where(col("doc_id") =!= col("keeper"))
+        .select(col("doc_id"))
+      val dropIds = hitStore.union(intraLosers).distinct()
+      val survivors = batch.join(dropIds, Seq("doc_id"), "left_anti")
+      // One file per micro-batch append (band rows are 4/doc — tiny):
+      // a steady stream would otherwise shed shuffle-partition-many
+      // small files per trigger and the store's read side would choke
+      // on file count long before data size. Periodic `Store.compact`
+      // on the band store is the long-run answer; coalesce keeps the
+      // interval between compactions long.
+      fresh.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .coalesce(1)
+        .write.mode("append").parquet(bandStore)
+      sink(survivors, batchId)
+    }
 
   /** Streaming CDC ingest: a continuous I/U/D changelog folded into a
     * parquet snapshot per micro-batch via
@@ -200,79 +197,195 @@ object DeltaStream {
     */
   def cdcIngest(changes: DataFrame, basePath: String, checkpoint: String,
                 idCol: String, seqCol: String, opCol: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val payloadCols = batch.columns.filterNot(c => c == seqCol || c == opCol)
-        val base = graft.ingest.Store.readSnapshot(spark, basePath)
-          .getOrElse(batch.select(payloadCols.map(col): _*).limit(0))
-        graft.ingest.Store.replaceSnapshot(
-          graft.ingest.Lifecycle.applyChangelog(base, batch, idCol, seqCol, opCol),
-          basePath)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(changes, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val payloadCols = batch.columns.filterNot(c => c == seqCol || c == opCol)
+      val base = graft.ingest.Store.readSnapshot(spark, basePath)
+        .getOrElse(batch.select(payloadCols.map(col): _*).limit(0))
+      graft.ingest.Store.replaceSnapshot(
+        graft.ingest.Lifecycle.applyChangelog(base, batch, idCol, seqCol, opCol),
+        basePath)
+    }
 
-  /** Streaming index maintenance: each micro-batch of new documents
-    * becomes ONE committed segment of an [[graft.index.IncrementalBm25]]
-    * index — the ingest half of the search story (the reference re-upserts
-    * delta points into its live Qdrant index, `scripts/indexing.py:
-    * 214-260`; here search stays available throughout because readers
-    * always see the last PUBLISHED stats version, never a half-appended
-    * segment). foreachBatch is at-least-once, so each batch tags the
-    * stats version it publishes with its batch id and a redelivered
-    * batch whose tag is already committed is skipped — combined with
-    * "retry overwrites the orphan segment at the same number", the index
-    * is exactly-once. Per-batch segments are single-file (micro-batches
-    * are small); periodic [[graft.index.IncrementalBm25.compact]] folds
-    * the tail, the standard LSM discipline. */
-  def indexIngest(docs: DataFrame, indexRoot: String, checkpoint: String,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  maxSegments: Int = Int.MaxValue)
-      : StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalBm25, SegmentStore}
-        // Bounded-storage maintenance loop: the live root is resolved
-        // through the durable pointer (first batch: `indexRoot` itself),
-        // and when the append pushes the segment count past
-        // `maxSegments`, this batch compacts and swaps the pointer —
-        // the stream is the only writer and readers resolve the
-        // pointer. The superseded root is NOT retired inline: a serving
-        // frame planned against it seconds before the swap must still
-        // collect, so retirement routes through the NEXT trigger's
-        // [[SegmentStore.recoverRoot]] sweep (one-trigger drain window —
-        // the pointer-swap twin of the tail-folds' retain-one-generation
-        // GC). The compacted root's first version carries THIS batch's
-        // idempotence tag: on redelivery (restart of the one uncommitted
-        // batch) the tag is found on the current root and the whole
-        // append+compact step is skipped — older batches are
-        // checkpoint-committed and never redelivered. recoverRoot also
-        // finishes a predecessor's crashed swap (adopts a published-but-
-        // unswapped compacted root carrying this batch's tag) so no
-        // crash window leaks an index copy.
-        withLeaseRetry() {
-          val ptr = s"$indexRoot.current"
-          val tag = s"batch_$batchId"
-          val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
-            IncrementalBm25.version, IncrementalBm25.committedHasTag)
-          if (!batch.isEmpty && !IncrementalBm25.committedHasTag(root, tag)) {
-            if (IncrementalBm25.version(root) == 0)
-              IncrementalBm25.init(batch, idCol, textCol, root,
-                numFiles = 1, tag = Some(tag))
-            else
-              IncrementalBm25.append(batch, idCol, textCol, root,
-                numFiles = 1, tag = Some(tag))
-            val newRoot = IncrementalBm25.compactIfNeeded(
-              batch.sparkSession, root, idCol, maxSegments, tag = Some(tag))
-            if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-          }
-        }
+  // ---- Index maintenance loops ----
+  //
+  // Six streaming loops keep the three incremental index families
+  // current: append-only [[indexIngest]] (BM25), [[ivfIngest]],
+  // [[knnIngest]] and [[textGraphIngest]] (graph), and the CDC loops
+  // [[indexCdcIngest]], [[ivfCdcIngest]] and [[textGraphCdcIngest]] for
+  // (op, key, payload) changelogs. Every trigger of every loop is the ONE
+  // [[maintain]] step over a [[Target]] — the family bound to its loop's
+  // parameters (the reference re-upserts delta points into its live
+  // Qdrant index, `scripts/indexing.py:214-260`; here search stays
+  // available throughout because readers always see the last PUBLISHED
+  // version, never a half-written segment).
+
+  /** How a loop's micro-batches read. */
+  private[graft] sealed trait Feed
+  /** Rows of new documents or vectors; an empty or already-committed
+    * batch is skipped whole, fold check included. */
+  private[graft] case object Appends extends Feed
+  /** An (op, key, payload) changelog with op ∈ {I, U, D}, collapsed to
+    * the net op per key ([[collapseCdc]]); the fold check runs every
+    * trigger, since deletes and upserts grow the ledger and fan-in too. */
+  private[graft] final case class Changelog(seqCol: Option[String]) extends Feed
+
+  /** One index family as the maintenance step drives it, bound to its
+    * loop's parameters: the changelog key, the family's id column, how
+    * changelog rows become index rows, and the family's mutators. What
+    * StreamingSpec pins per family lives here as data — only BM25 can
+    * [[init]] an empty root from a batch (IVF and kNN freeze centroids at
+    * an explicit init, so their append refuses an uninitialized root), and
+    * only the graph family [[repair]]s before the insert half. */
+  private[graft] abstract class Target(val family: SegmentFamily,
+                                       val key: String, val idCol: String) {
+    def rows(changes: DataFrame): DataFrame
+    def init(rows: DataFrame, root: String, tag: String): Unit =
+      append(rows, root, tag)
+    def append(rows: DataFrame, root: String, tag: String): Unit
+    def delete(ids: DataFrame, root: String, tag: String): Unit
+    def upsert(rows: DataFrame, root: String, tag: String): Unit
+    def repair(root: String, tag: String): Unit = ()
+    def compact(root: String, newRoot: String, tag: String): Unit
+    def tailFold(root: String, maxSegments: Int, tag: String): Unit
+
+    /** A trigger's fold: the size-tiered tail-fold in place (`inPlace`),
+      * or a compaction into a sibling root once the version passes
+      * `maxSegments` — whose first version carries the batch's tag, and
+      * which is returned for the caller's pointer swap. */
+    final def fold(root: String, maxSegments: Int, inPlace: Boolean,
+                   batchId: Long): Option[String] =
+      if (inPlace) { tailFold(root, maxSegments, s"fold_$batchId"); None }
+      else Some(SegmentStore.compactIfNeeded(root, family.version(root),
+        maxSegments)(compact(root, _, s"batch_$batchId"))).filter(_ != root)
+  }
+
+  /** BM25 over (doc_id, text); single-file segments (micro-batches are
+    * small). `driftFoldShare` < 1 lets the tail-fold trigger escalate to
+    * the full merge moment when the stale-stats drift share crosses it
+    * ([[IncrementalBm25.tailFoldIfNeeded]]). */
+  private[graft] def bm25(spark: SparkSession,
+                          driftFoldShare: Double = 1.0): Target =
+    new Target(IncrementalBm25, "doc_id", "doc_id") {
+      def rows(c: DataFrame) = c.select(col("doc_id"), col("text"))
+      override def init(r: DataFrame, root: String, tag: String) =
+        IncrementalBm25.init(r, "doc_id", "text", root, numFiles = 1, tag = Some(tag))
+      def append(r: DataFrame, root: String, tag: String) =
+        IncrementalBm25.append(r, "doc_id", "text", root, numFiles = 1, tag = Some(tag))
+      def delete(ids: DataFrame, root: String, tag: String) =
+        IncrementalBm25.delete(ids, "doc_id", root, Some(tag))
+      def upsert(r: DataFrame, root: String, tag: String) =
+        IncrementalBm25.upsert(r, "doc_id", "text", root, numFiles = 1, tag = Some(tag))
+      def compact(root: String, newRoot: String, tag: String) =
+        IncrementalBm25.compact(spark, root, newRoot, "doc_id", tag = Some(tag))
+      def tailFold(root: String, maxSegments: Int, tag: String): Unit =
+        IncrementalBm25.tailFoldIfNeeded(spark, root, "doc_id", maxSegments,
+          tag = Some(tag), driftFoldShare = driftFoldShare)
+    }
+
+  /** IVF over (vec_id, embedding). Exclusion IS rebuild semantics, so no
+    * repair step exists. */
+  private[graft] def ivf(spark: SparkSession): Target =
+    new Target(IncrementalIvf, "vec_id", "vec_id") {
+      def rows(c: DataFrame) = c.select(col("vec_id"), col("embedding"))
+      def append(r: DataFrame, root: String, tag: String) =
+        IncrementalIvf.append(r, root, Some(tag))
+      def delete(ids: DataFrame, root: String, tag: String) =
+        IncrementalIvf.delete(ids, root, Some(tag))
+      def upsert(r: DataFrame, root: String, tag: String) =
+        IncrementalIvf.upsert(r, root, Some(tag))
+      def compact(root: String, newRoot: String, tag: String) =
+        IncrementalIvf.compact(spark, root, newRoot, Some(tag))
+      def tailFold(root: String, maxSegments: Int, tag: String): Unit =
+        IncrementalIvf.tailFoldIfNeeded(spark, root, maxSegments, tag = Some(tag))
+    }
+
+  /** The kNN graph over (vec_id, embedding) rows — or, with `dataDir`,
+    * over (doc_id, text) rows embedded into the FROZEN corpus tfidf space
+    * ([[TfIdfGraphIndex.embedDocsDense]]; the model never retrains per
+    * delta, exactly like the reference's frozen `bge-small` weights).
+    * Every delete- or update-carrying trigger runs
+    * [[IncrementalKnn.repair]] BEFORE the insert half: if the insert
+    * triggers a compaction, the fold must see the REPAIRED edges —
+    * compacting a holed graph would bake the degraded top-k in and clear
+    * the tombstones the repair needs. */
+  private[graft] def knn(spark: SparkSession, nprobe: Int, k: Int,
+                         dataDir: Option[String] = None): Target =
+    new Target(IncrementalKnn, "doc_id", "vec_id") {
+      def rows(c: DataFrame) = dataDir.fold(c)(d => TfIdfGraphIndex
+        .embedDocsDense(spark, d, c.select(col("doc_id"), col("text"))))
+      def append(r: DataFrame, root: String, tag: String) =
+        IncrementalKnn.append(r, root, nprobe, k, Some(tag))
+      def delete(ids: DataFrame, root: String, tag: String) =
+        IncrementalKnn.delete(ids, root, Some(tag))
+      def upsert(r: DataFrame, root: String, tag: String) =
+        IncrementalKnn.upsert(r, root, nprobe, k, Some(tag))
+      override def repair(root: String, tag: String) =
+        IncrementalKnn.repair(spark, root, nprobe, k, Some(tag))
+      def compact(root: String, newRoot: String, tag: String) =
+        IncrementalKnn.compact(spark, root, newRoot, k, Some(tag))
+      def tailFold(root: String, maxSegments: Int, tag: String): Unit =
+        IncrementalKnn.tailFoldIfNeeded(spark, root, maxSegments, tag = Some(tag))
+    }
+
+  /** The ONE per-trigger maintenance step of every index loop, run
+    * under [[withLeaseRetry]]:
+    *
+    *   1. [[SegmentStore.recoverRoot]] resolves the live root through the
+    *      durable `<indexRoot>.current` pointer (first trigger:
+    *      `indexRoot` itself), finishes a predecessor's crashed swap and
+    *      retires the root the last swap superseded — retirement waits one
+    *      trigger so a serving frame planned against it before the swap
+    *      still collects;
+    *   2. the batch splits into net D, U and I rows ([[collapseCdc]] for a
+    *      changelog; every row is an insert for [[Appends]]);
+    *   3. on a live root, DELETES tombstone first (the doc leaves every
+    *      read this trigger), UPSERTS replace in place, [[Target.repair]]
+    *      heals what they left, and INSERTS append last; on an empty root
+    *      every net U is a net insert and the inserts [[Target.init]] it;
+    *   4. the fold: a tail-fold in place, or a compaction into a sibling
+    *      root whose first version carries this batch's tag, followed by
+    *      the pointer swap.
+    *
+    * foreachBatch is at-least-once, so every mutation carries a tag
+    * derived from the batch id (`del_`, `ups_`, `rep_`, `fold_`, and
+    * `batch_` for the inserts and the compaction) and a redelivered
+    * batch replays as no-ops: exactly-once in effect. The stream is the
+    * root's only writer; readers resolve the pointer. */
+  private[graft] def maintain(t: Target, feed: Feed, batch: DataFrame,
+                              batchId: Long, indexRoot: String,
+                              maxSegments: Int,
+                              tailFoldCompaction: Boolean = false): Unit =
+    withLeaseRetry() {
+      val fam = t.family
+      val ptr = s"$indexRoot.current"
+      val tag = s"batch_$batchId"
+      val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
+        fam.version, fam.tagCommitted)
+      def present(df: DataFrame) = Some(df).filterNot(_.isEmpty)
+      val (dels, ups, ins) = feed match {
+        case Appends => (None, None, present(batch))
+        case Changelog(seqCol) =>
+          val nb = collapseCdc(batch, t.key, seqCol)
+          def op(o: String) = present(nb.where(col("op") === o))
+          (op("D"), op("U"), op("I"))
       }
-      .outputMode(OutputMode.Update())
-      .start()
+      val live = fam.version(root) > 0
+      if (live) {
+        dels.foreach(d => t.delete(
+          d.select(col(t.key).cast("long").as(t.idCol)), root, s"del_$batchId"))
+        ups.foreach(u => t.upsert(t.rows(u), root, s"ups_$batchId"))
+        if (dels.nonEmpty || ups.nonEmpty) t.repair(root, s"rep_$batchId")
+      }
+      val inserts = (if (live) ins else (ins ++ ups).reduceOption(_ unionByName _))
+        .filterNot(_ => fam.tagCommitted(root, tag))
+      inserts.foreach { r =>
+        if (live) t.append(t.rows(r), root, tag) else t.init(t.rows(r), root, tag)
+      }
+      if (fam.version(root) > 0 && (feed != Appends || inserts.nonEmpty))
+        t.fold(root, maxSegments, tailFoldCompaction, batchId)
+          .foreach(SegmentStore.setPointer(ptr, _))
+    }
 
   /** Collapse a CDC micro-batch to the NET operation per key — the
     * in-batch ordering contract (r10 ADVICE): the ingest loops apply ops
@@ -316,154 +429,55 @@ object DeltaStream {
         batch
     }
 
-  /** CDC-shaped [[indexIngest]] — the BM25 member of the family pattern
-    * ([[textGraphCdcIngest]] is the graph member): each micro-batch of
-    * (op, doc_id, text) changelog rows is collapsed to the net op per
-    * key ([[collapseCdc]] — pass `seqCol` when a trigger can carry
-    * multiple ops for one key), then DELETES apply first
-    * ([[graft.index.IncrementalBm25.delete]] tombstones — the doc leaves
-    * every `topK` this trigger, stats stale until compaction per the
-    * Lucene contract), op=U UPSERTS in place
-    * ([[graft.index.IncrementalBm25.upsert]] — same id, new text), and
-    * INSERTS last, inside the one single-writer loop. On an
-    * uninitialized root, net-U rows fold into the init set (they are
-    * net inserts by definition there). With `tailFoldCompaction`,
-    * `driftFoldShare` < 1 additionally escalates to the full merge
-    * moment when the stale-stats drift share crosses it
-    * ([[graft.index.IncrementalBm25.tailFoldIfNeeded]]) — the
-    * delete-heavy steady state catches its scoring stats up without an
-    * operator call. */
+  /** Streaming BM25 maintenance: each micro-batch of new (doc_id, text)
+    * documents becomes ONE committed [[IncrementalBm25]] segment (the
+    * first one inits the root); when the segment count passes
+    * `maxSegments`, that batch compacts into a sibling root and swaps the
+    * pointer — bounded storage, see [[maintain]]. */
+  def indexIngest(docs: DataFrame, indexRoot: String, checkpoint: String,
+                  maxSegments: Int = Int.MaxValue): StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      maintain(bm25(batch.sparkSession), Appends, batch, batchId, indexRoot,
+        maxSegments)
+    }
+
+  /** CDC-shaped [[indexIngest]] over (op, doc_id, text) rows: deletes are
+    * Lucene tombstones (the doc leaves every `topK` this trigger, stats
+    * stale until a full fold or compaction), updates replace the text in
+    * place, inserts append; on an empty root the first batch inits it.
+    * Pass `seqCol` when one trigger can carry several ops for a key. With
+    * `tailFoldCompaction` the root folds in place (O(tail) per trigger,
+    * the pointer never moves) instead of compacting into a sibling, and
+    * `driftFoldShare` < 1 escalates that fold to the full merge moment
+    * when the stale-stats drift share crosses it — the delete-heavy
+    * steady state catches its scoring stats up without an operator
+    * call. */
   def indexCdcIngest(changes: DataFrame, indexRoot: String,
                      checkpoint: String,
-                     idCol: String = "doc_id", textCol: String = "text",
                      maxSegments: Int = Int.MaxValue,
                      seqCol: Option[String] = None,
                      tailFoldCompaction: Boolean = false,
                      driftFoldShare: Double = 1.0): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalBm25, SegmentStore}
-        withLeaseRetry() {
-        val ptr = s"$indexRoot.current"
-        val tag = s"batch_$batchId"
-        val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
-          IncrementalBm25.version, IncrementalBm25.committedHasTag)
-        val nb = collapseCdc(batch, idCol, seqCol)
-        val live = IncrementalBm25.version(root) > 0
-        val dels = nb.where(col("op") === "D")
-          .select(col(idCol).cast("long").as(idCol))
-        if (!dels.isEmpty && live)
-          IncrementalBm25.delete(dels, idCol, root, Some(s"del_$batchId"))
-        val ups0 = nb.where(col("op") === "U")
-          .select(col(idCol), col(textCol))
-        if (live && !ups0.isEmpty)
-          IncrementalBm25.upsert(ups0, idCol, textCol, root,
-            numFiles = 1, tag = Some(s"ups_$batchId"))
-        val ins0 = nb.where(col("op") === "I")
-          .select(col(idCol), col(textCol))
-        val ins = if (live) ins0 else ins0.unionByName(ups0)
-        if (!ins.isEmpty && !IncrementalBm25.committedHasTag(root, tag)) {
-          if (IncrementalBm25.version(root) == 0)
-            IncrementalBm25.init(ins, idCol, textCol, root,
-              numFiles = 1, tag = Some(tag))
-          else
-            IncrementalBm25.append(ins, idCol, textCol, root,
-              numFiles = 1, tag = Some(tag))
-        }
-        // compaction check runs for EVERY op mix, not just inserts:
-        // upserts append a segment each (and deletes grow the tombstone
-        // ledger the fold clears), so a pure-U/D changelog — the common
-        // steady-state CDC shape — must still hit the size-tiered fold or
-        // segment fan-in grows without bound ([[textGraphCdcIngest]]
-        // always had it hoisted; this loop gated it on inserts).
-        if (IncrementalBm25.version(root) > 0) {
-          if (tailFoldCompaction) {
-            // in-place bounded-write fold (see [[ivfCdcIngest]]'s twin):
-            // O(tail) per trigger, pointer never moves. `driftFoldShare`
-            // escalates to the FULL merge moment when the family's
-            // stale-stats drift crosses the operator's tolerance.
-            IncrementalBm25.tailFoldIfNeeded(batch.sparkSession, root,
-              idCol, maxSegments, tag = Some(s"fold_$batchId"),
-              driftFoldShare = driftFoldShare)
-            ()
-          } else {
-            val newRoot = IncrementalBm25.compactIfNeeded(
-              batch.sparkSession, root, idCol, maxSegments, tag = Some(tag))
-            // superseded root retired by the NEXT trigger's recoverRoot
-            // sweep, not inline — see [[indexIngest]]'s drain note
-            if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-          }
-        }
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(changes, checkpoint) { (batch, batchId) =>
+      maintain(bm25(batch.sparkSession, driftFoldShare), Changelog(seqCol),
+        batch, batchId, indexRoot, maxSegments, tailFoldCompaction)
+    }
 
-  /** CDC-shaped [[ivfIngest]] — the IVF member of the family pattern:
-    * the micro-batch collapses to the net op per key ([[collapseCdc]];
-    * pass `seqCol` for multi-op-per-key triggers), then deletes
-    * tombstone first ([[graft.index.IncrementalIvf.delete]] — exclusion
-    * IS rebuild semantics for IVF, so the served index equals a rebuild
-    * without the deleted vectors from this trigger on, no staleness and
-    * no repair step needed), upserts and inserts follow. The stream
-    * must be initialized first ([[graft.index.IncrementalIvf.init]]
-    * freezes the centroids). */
+  /** CDC-shaped [[ivfIngest]] over (op, vec_id, embedding) rows: a delete
+    * leaves the served index equal to a rebuild without the vector from
+    * this trigger on (no staleness, no repair step), updates replace the
+    * embedding in place, inserts append. The root must be initialized
+    * first ([[IncrementalIvf.init]] freezes the centroids). `seqCol` and
+    * `tailFoldCompaction` as for [[indexCdcIngest]]. */
   def ivfCdcIngest(changes: DataFrame, indexRoot: String,
                    checkpoint: String,
                    maxSegments: Int = Int.MaxValue,
                    seqCol: Option[String] = None,
                    tailFoldCompaction: Boolean = false): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalIvf, SegmentStore}
-        withLeaseRetry() {
-        val ptr = s"$indexRoot.current"
-        val tag = s"batch_$batchId"
-        val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
-          IncrementalIvf.version, IncrementalIvf.committedHasTag)
-        val nb = collapseCdc(batch, "vec_id", seqCol)
-        val dels = nb.where(col("op") === "D")
-          .select(col("vec_id").cast("long").as("vec_id"))
-        if (!dels.isEmpty && IncrementalIvf.version(root) > 0)
-          IncrementalIvf.delete(dels, root, Some(s"del_$batchId"))
-        val ups = nb.where(col("op") === "U")
-          .select(col("vec_id"), col("embedding"))
-        if (!ups.isEmpty && IncrementalIvf.version(root) > 0)
-          IncrementalIvf.upsert(ups, root, Some(s"ups_$batchId"))
-        val ins = nb.where(col("op") === "I")
-          .select(col("vec_id"), col("embedding"))
-        if (!ins.isEmpty && !IncrementalIvf.committedHasTag(root, tag))
-          IncrementalIvf.append(ins, root, tag = Some(tag))
-        // hoisted like [[textGraphCdcIngest]]'s: upsert-only triggers
-        // append segments too and must still reach the fold (see the
-        // BM25 loop above)
-        if (IncrementalIvf.version(root) > 0) {
-          if (tailFoldCompaction) {
-            // in-place bounded-write fold: O(tail) per trigger instead
-            // of the full fold's O(corpus) rewrite — the steady-state
-            // choice for a long-running 100 TB ingest (the pointer
-            // never moves; readers keep their path). Trigger on READ
-            // fan-in, which the version clock stops reflecting after
-            // the first fold.
-            // ladder warning discarded here: the loop's maxSegments is
-            // caller-configured; operators watch it via the admin route
-            IncrementalIvf.tailFoldIfNeeded(batch.sparkSession, root,
-              maxSegments, tag = Some(s"fold_$batchId"))
-            ()
-          } else {
-            val newRoot = IncrementalIvf.compactIfNeeded(
-              batch.sparkSession, root, maxSegments, tag = Some(tag))
-            // superseded root retired by the NEXT trigger's recoverRoot
-            // sweep, not inline — see [[indexIngest]]'s drain note
-            if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-          }
-        }
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(changes, checkpoint) { (batch, batchId) =>
+      maintain(ivf(batch.sparkSession), Changelog(seqCol), batch, batchId,
+        indexRoot, maxSegments, tailFoldCompaction)
+    }
 
   /** Streaming percolation: saved-search alerts fire on each arriving
     * micro-batch ([[graft.search.Percolate]] — conjunctive match is
@@ -477,14 +491,10 @@ object DeltaStream {
   def percolateIngest(docs: DataFrame, alerts: DataFrame, outPath: String,
                       checkpoint: String, idCol: String = "doc_id",
                       textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.search.Percolate.matches(batch, alerts, idCol, textCol)
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(docs, checkpoint) { (batch, _) =>
+      graft.search.Percolate.matches(batch, alerts, idCol, textCol)
+        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
+    }
 
   /** Streaming VECTOR percolation — the dense twin of
     * [[percolateIngest]]: every micro-batch of (vec_id, embedding) rows
@@ -496,14 +506,10 @@ object DeltaStream {
   def vectorPercolateServe(docs: DataFrame, alerts: DataFrame,
                            outPath: String,
                            checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.search.Percolate.vectorMatches(batch, alerts)
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(docs, checkpoint) { (batch, _) =>
+      graft.search.Percolate.vectorMatches(batch, alerts)
+        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
+    }
 
   /** Streaming HYBRID percolation — the term+vector member of the
     * percolation matrix's streaming column ([[percolateIngest]] = term,
@@ -522,211 +528,89 @@ object DeltaStream {
                            idCol: String = "doc_id",
                            textCol: String = "text",
                            inverted: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val emb = batch.select(col(idCol).cast("long").as("vec_id"),
-          col("embedding"))
-        val m =
-          if (inverted) graft.search.Percolate.hybridMatchesInverted(
-            batch, emb, alerts, idCol, textCol)
-          else graft.search.Percolate.hybridMatches(
-            batch, emb, alerts, idCol, textCol)
-        m.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(docs, checkpoint) { (batch, _) =>
+      val emb = batch.select(col(idCol).cast("long").as("vec_id"),
+        col("embedding"))
+      val m =
+        if (inverted) graft.search.Percolate.hybridMatchesInverted(
+          batch, emb, alerts, idCol, textCol)
+        else graft.search.Percolate.hybridMatches(
+          batch, emb, alerts, idCol, textCol)
+      m.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
+    }
 
-  /** Streaming VECTOR index maintenance — the dense twin of
-    * [[indexIngest]]: each micro-batch of new (vec_id, embedding) rows is
-    * assigned against the frozen centroids and committed as ONE segment of
-    * an [[graft.index.IncrementalIvf]] index. Unlike the in-place
+  /** Streaming VECTOR index maintenance, like [[indexIngest]]: each
+    * micro-batch of new (vec_id, embedding) rows is assigned against the
+    * frozen centroids and committed as ONE segment of an
+    * [[IncrementalIvf]] index. Unlike the in-place
     * `IvfIndex.appendAssign` demo (which appends files into the live
     * assigned dir, so a crashed task can leave a torn append visible),
     * the segment commit is atomic and batch-id-tagged: readers see only
-    * published versions, redelivered batches are no-ops — exactly-once in
-    * effect. The stream must be initialized first ([[graft.index
-    * .IncrementalIvf.init]] freezes the centroids); empty micro-batches
-    * are skipped. */
+    * published versions, redelivered batches are no-ops. The root must be
+    * initialized first ([[IncrementalIvf.init]] freezes the centroids). */
   def ivfIngest(vectors: DataFrame, indexRoot: String, checkpoint: String,
-                maxSegments: Int = Int.MaxValue)
-      : StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalIvf, SegmentStore}
-        // Same bounded-storage maintenance loop as [[indexIngest]]:
-        // pointer-resolved root (with crashed-swap recovery), compact
-        // and swap in the batch that crosses `maxSegments` (compacting
-        // batch's tag on the new root), superseded root retired by the
-        // NEXT trigger's recoverRoot sweep.
-        withLeaseRetry() {
-          val ptr = s"$indexRoot.current"
-          val tag = s"batch_$batchId"
-          val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
-            IncrementalIvf.version, IncrementalIvf.committedHasTag)
-          if (!batch.isEmpty && !IncrementalIvf.committedHasTag(root, tag)) {
-            IncrementalIvf.append(batch, root, tag = Some(tag))
-            val newRoot = IncrementalIvf.compactIfNeeded(
-              batch.sparkSession, root, maxSegments, tag = Some(tag))
-            if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-          }
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+                maxSegments: Int = Int.MaxValue): StreamingQuery =
+    eachBatch(vectors, checkpoint) { (batch, batchId) =>
+      maintain(ivf(batch.sparkSession), Appends, batch, batchId, indexRoot,
+        maxSegments)
+    }
 
   /** Streaming kNN-GRAPH maintenance: each micro-batch of new (vec_id,
-    * embedding) rows becomes one committed [[graft.index.IncrementalKnn]]
-    * segment — the new vectors probe the whole graph so far AND every
-    * prior vector gains the batch as candidates, so the merged graph
-    * stays hash-exact a whole-corpus rebuild after every trigger. Same
-    * exactly-once discipline as [[ivfIngest]]: atomic version markers,
-    * batch-id tags make redelivered micro-batches no-ops. The graph that
-    * SemDeDup clustering / diversity audits read is therefore never
-    * stale by more than one trigger interval. */
+    * embedding) rows becomes one committed [[IncrementalKnn]] segment —
+    * the new vectors probe the whole graph so far AND every prior vector
+    * gains the batch as candidates, so the merged graph stays hash-exact
+    * a whole-corpus rebuild after every trigger. The graph that SemDeDup
+    * clustering / diversity audits read is therefore never stale by more
+    * than one trigger interval. */
   def knnIngest(vectors: DataFrame, graphRoot: String, checkpoint: String,
                 nprobe: Int, k: Int,
                 maxSegments: Int = Int.MaxValue): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graphMaintainBatch(batch, graphRoot, batchId, nprobe, k, maxSegments)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
-
-  /** The shared per-micro-batch graph maintenance step of [[knnIngest]] /
-    * [[textGraphIngest]] — the same bounded-storage loop as
-    * [[indexIngest]]: crash-recovery sweep, idempotence tag check,
-    * append, size-tiered compaction behind a durable pointer swap. */
-  private def graphMaintainBatch(batch: DataFrame, graphRoot: String,
-                                 batchId: Long, nprobe: Int, k: Int,
-                                 maxSegments: Int): Unit = {
-    import graft.index.{IncrementalKnn, SegmentStore}
-    withLeaseRetry() {
-      val ptr = s"$graphRoot.current"
-      val tag = s"batch_$batchId"
-      val root = SegmentStore.recoverRoot(ptr, graphRoot, tag)(
-        IncrementalKnn.version, IncrementalKnn.committedHasTag)
-      if (!batch.isEmpty && !IncrementalKnn.committedHasTag(root, tag)) {
-        IncrementalKnn.append(batch, root, nprobe, k, tag = Some(tag))
-        val newRoot = IncrementalKnn.compactIfNeeded(
-          batch.sparkSession, root, k, maxSegments, tag = Some(tag))
-        if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-      }
+    eachBatch(vectors, checkpoint) { (batch, batchId) =>
+      maintain(knn(batch.sparkSession, nprobe, k), Appends, batch, batchId,
+        graphRoot, maxSegments)
     }
-  }
 
   /** Streaming TEXT-graph maintenance — `mode=graph`'s freshness story:
-    * each micro-batch of new (doc_id, text) rows embeds into the FROZEN
-    * corpus tfidf space driver-declared from `dataDir`'s idf artifact
-    * ([[graft.index.TfIdfGraphIndex.embedDocsDense]] — the model never
-    * retrains per delta, exactly like the reference's frozen `bge-small`
-    * weights) and lands as one committed [[graft.index.IncrementalKnn]]
-    * segment of the serving graph. A document is therefore graph-
-    * searchable one trigger interval after it arrives, without any
+    * each micro-batch of new (doc_id, text) rows embeds into the frozen
+    * corpus tfidf space of `dataDir` and lands as one committed
+    * [[IncrementalKnn]] segment of the serving graph, so a document is
+    * graph-searchable one trigger interval after it arrives without any
     * rebuild — the reference's live-HNSW-insert behavior
-    * (`scripts/indexing.py:214-260`) on Spark's micro-batch clock.
-    * Same exactly-once + bounded-storage discipline as [[knnIngest]];
-    * the root must be initialized first (e.g. by
-    * [[graft.index.TfIdfGraphIndex.ensureGrown]] or an explicit
-    * `IncrementalKnn.init` over the build corpus). */
+    * (`scripts/indexing.py:214-260`) on Spark's micro-batch clock. The
+    * root must be initialized first (e.g. by
+    * [[TfIdfGraphIndex.ensureGrown]] or an explicit `IncrementalKnn.init`
+    * over the build corpus). */
   def textGraphIngest(docs: DataFrame, dataDir: String, graphRoot: String,
                       checkpoint: String, nprobe: Int, k: Int,
                       maxSegments: Int = Int.MaxValue): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dense = graft.index.TfIdfGraphIndex
-          .embedDocsDense(batch.sparkSession, dataDir, batch)
-        graphMaintainBatch(dense, graphRoot, batchId, nprobe, k, maxSegments)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      maintain(knn(batch.sparkSession, nprobe, k, Some(dataDir)), Appends,
+        batch, batchId, graphRoot, maxSegments)
+    }
 
   /** CDC-shaped [[textGraphIngest]] — the full index-maintenance pipeline
-    * a CRUD store feeds: each micro-batch of (op, doc_id, text) changelog
-    * rows applies DELETES first ([[graft.index.IncrementalKnn.delete]]
-    * tombstones — the doc leaves every serving read this trigger) and
-    * INSERTS second (frozen-space embed + append, like
-    * [[textGraphIngest]]), all inside the ONE single-writer maintenance
-    * loop, so deletes can never race a concurrent compaction swap.
-    * Deletes and inserts carry separate idempotence tags, so an
-    * at-least-once redelivery replays both halves as no-ops.
-    * With `repairAfterDelete` (the default), every delete- or
-    * update-carrying trigger runs [[graft.index.IncrementalKnn.repair]]
-    * — the delta-cost neighbor healing — BEFORE the insert half, so the
-    * served graph NEVER degrades: after each trigger it equals a rebuild
-    * over the current rows (the a29/a30 exactness arguments), without
-    * any rebuild ever running.
-    * UPDATES (`op = U`) apply IN PLACE under the same id
-    * ([[graft.index.IncrementalKnn.upsert]] — versioned tombstone +
-    * same-id re-embed+append): the old version leaves every read this
-    * trigger, the new text serves from this trigger on. The micro-batch
-    * collapses to the net op per key first ([[collapseCdc]] — pass
-    * `seqCol` when one trigger can carry several ops for a key). */
+    * a CRUD store feeds, over (op, doc_id, text) rows: deletes tombstone
+    * first (the doc leaves every serving read this trigger), updates
+    * apply IN PLACE under the same id (versioned tombstone + re-embed and
+    * append), every delete- or update-carrying trigger then runs the
+    * delta-cost neighbor repair, and inserts append last — so after each
+    * trigger the served graph equals a rebuild over the current rows (the
+    * a29/a30 exactness arguments) without any rebuild ever running.
+    * `seqCol` and `tailFoldCompaction` as for [[indexCdcIngest]]; the
+    * in-place fold is pure reorganization for this family and reclaims
+    * neither tombstones nor repair segments — schedule
+    * [[IncrementalKnn.reclaimFold]] or a compaction as the deep clean. */
   def textGraphCdcIngest(changes: DataFrame, dataDir: String,
                          graphRoot: String, checkpoint: String,
                          nprobe: Int, k: Int,
                          maxSegments: Int = Int.MaxValue,
-                         repairAfterDelete: Boolean = true,
                          seqCol: Option[String] = None,
                          tailFoldCompaction: Boolean = false): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalKnn, SegmentStore, TfIdfGraphIndex}
-        val spark = batch.sparkSession
-        withLeaseRetry() {
-        val ptr = s"$graphRoot.current"
-        val tag = s"batch_$batchId"
-        val root = SegmentStore.recoverRoot(ptr, graphRoot, tag)(
-          IncrementalKnn.version, IncrementalKnn.committedHasTag)
-        val nb = collapseCdc(batch, "doc_id", seqCol)
-        val dels = nb.where(col("op") === "D")
-          .select(col("doc_id").cast("long").as("vec_id"))
-        val hadDels = !dels.isEmpty
-        if (hadDels) IncrementalKnn.delete(dels, root, Some(s"del_$batchId"))
-        val ups = nb.where(col("op") === "U")
-          .select(col("doc_id"), col("text"))
-        val hadUps = !ups.isEmpty
-        if (hadUps) IncrementalKnn.upsert(
-          TfIdfGraphIndex.embedDocsDense(spark, dataDir, ups),
-          root, nprobe, k, Some(s"ups_$batchId"))
-        // heal BEFORE the insert half: if the insert triggers a
-        // compaction, the fold must see the REPAIRED edges — compacting
-        // a holed graph would bake the degraded top-k in and clear the
-        // tombstones the repair needs (holes only ever come from deletes
-        // and upserts, both already applied for this trigger)
-        if ((hadDels || hadUps) && repairAfterDelete)
-          IncrementalKnn.repair(spark, root, nprobe, k, Some(s"rep_$batchId"))
-        val ins = nb.where(col("op") === "I")
-          .select(col("doc_id"), col("text"))
-        if (!ins.isEmpty && !IncrementalKnn.committedHasTag(root, tag))
-          IncrementalKnn.append(
-            TfIdfGraphIndex.embedDocsDense(spark, dataDir, ins),
-            root, nprobe, k, tag = Some(tag))
-        if (tailFoldCompaction) {
-          // in-place bounded-write fold (pure reorganization for this
-          // family — stored horizons, so holes/repairs/coverage read
-          // identically; see [[graft.index.IncrementalKnn.tailFold]]).
-          // Unlike the full compact above it does NOT reclaim tombstones
-          // or repair segments — schedule compact() as the deep clean.
-          IncrementalKnn.tailFoldIfNeeded(spark, root, maxSegments,
-            tag = Some(s"fold_$batchId"))
-          ()
-        } else {
-          val newRoot = IncrementalKnn.compactIfNeeded(
-            spark, root, k, maxSegments, tag = Some(tag))
-          // superseded root retired by the NEXT trigger's recoverRoot
-          // sweep, not inline — see [[indexIngest]]'s drain note
-          if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-        }
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(changes, checkpoint) { (batch, batchId) =>
+      maintain(knn(batch.sparkSession, nprobe, k, Some(dataDir)),
+        Changelog(seqCol), batch, batchId, graphRoot, maxSegments,
+        tailFoldCompaction)
+    }
 
   /** Streaming ANN serving: a continuous stream of (qid, qvec) query rows
     * answered per micro-batch by ONE batched IVF plan over a PERSISTED
@@ -743,14 +627,10 @@ object DeltaStream {
                centroids: DataFrame, checkpoint: String,
                nprobe: Int, k: Int)
               (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.search.Ann
-          .ivfTopKBatched(assigned, centroids, batch, nprobe, k), batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(queryStream, checkpoint) { (batch, batchId) =>
+      sink(graft.search.Ann
+        .ivfTopKBatched(assigned, centroids, batch, nprobe, k), batchId)
+    }
 
   /** Streaming GRAPH-ANN serve — [[annServe]]'s graph-walk twin: vector
     * queries arrive as (qid, qvec) rows and each micro-batch is answered
@@ -762,15 +642,11 @@ object DeltaStream {
                  vectors: DataFrame, checkpoint: String,
                  sampleMod: Int, e: Int, beam: Int, hops: Int, k: Int)
                 (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.search.Ann.graphTopKBatched(edges, vectors, batch,
-          graft.search.Ann.hierEntriesBatched(vectors, batch, sampleMod, e),
-          beam, hops, k), batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(queryStream, checkpoint) { (batch, batchId) =>
+      sink(graft.search.Ann.graphTopKBatched(edges, vectors, batch,
+        graft.search.Ann.hierEntriesBatched(vectors, batch, sampleMod, e),
+        beam, hops, k), batchId)
+    }
 
   /** Streaming HYBRID serve — the flagship query's streaming form: text
     * queries arrive as (qid, qtext) rows and each micro-batch is answered as
@@ -785,16 +661,12 @@ object DeltaStream {
   def hybridServe(queryStream: DataFrame, dataDir: String, checkpoint: String,
                   k: Int)
                  (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qs = batch.select(col("qid").cast("long"), col("qtext"))
-          .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-        sink(graft.search.SearchEngine
-          .textHybridBatched(batch.sparkSession, dataDir, qs, k), batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    eachBatch(queryStream, checkpoint) { (batch, batchId) =>
+      val qs = batch.select(col("qid").cast("long"), col("qtext"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      sink(graft.search.SearchEngine
+        .textHybridBatched(batch.sparkSession, dataDir, qs, k), batchId)
+    }
 
   /** Declarative gap-sessionization: Spark's native `session_window`
     * (watermarked, state managed by the engine) — the zero-custom-code

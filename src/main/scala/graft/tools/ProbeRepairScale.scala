@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.index.IncrementalKnn
 import graft.search.Ann
+import graft.streaming.DeltaStream
 
 /** Measure the delete→repair maintenance cost against the rebuild it
   * replaces, at two corpus scales — the evidence for the "repair is the
@@ -17,10 +18,12 @@ import graft.search.Ann
   * holes), then times: the tombstone write, the repair (one columnar
   * corpus scan to find holes + delta-shaped recompute), the healed read,
   * and — for comparison — the full rebuild (`Ann.knnGraph` over the
-  * survivors) the repair makes unnecessary. Emits ONE JSON line. The
-  * interesting ratio is repair/rebuild at growing sf: the rebuild's
-  * candidate join grows with corpus × probed-list size, the repair's
-  * recompute only with deleted degree.
+  * survivors) the repair makes unnecessary. The append, delete and
+  * repair go through the same family binding the streaming maintenance
+  * step drives on a delete-carrying trigger (`DeltaStream.knn`). Emits
+  * ONE JSON line. The interesting ratio is repair/rebuild at growing
+  * sf: the rebuild's candidate join grows with corpus × probed-list
+  * size, the repair's recompute only with deleted degree.
   */
 object ProbeRepairScale {
   def main(args: Array[String]): Unit = {
@@ -45,9 +48,10 @@ object ProbeRepairScale {
       (r, (System.nanoTime() - t0) / 1e9)
     }
 
+    val knn = DeltaStream.knn(spark, 3, 5)
     val (_, tBuild) = timed {
       IncrementalKnn.init(emb.where(col("vec_id") % 2 === 0), centroids, root, 3, 5)
-      IncrementalKnn.append(emb.where(col("vec_id") % 2 === 1), root, 3, 5)
+      knn.append(emb.where(col("vec_id") % 2 === 1), root, "b1")
     }
     // ids that are stored neighbors (holes guaranteed), spread over srcs
     val dels = IncrementalKnn.edges(spark, root, 5)
@@ -55,10 +59,10 @@ object ProbeRepairScale {
       .orderBy(col("dst")).limit(nDel)
       .collect().map(_.getLong(0)).toSeq
     val (_, tDelete) = timed {
-      IncrementalKnn.delete(dels.toDF("vec_id"), root, tag = Some("p1"))
+      knn.delete(dels.toDF("vec_id"), root, "p1")
     }
     val (_, tRepair) = timed {
-      IncrementalKnn.repair(spark, root, 3, 5, tag = Some("r1"))
+      knn.repair(root, "r1")
     }
     val (healedRows, tRead) = timed {
       IncrementalKnn.edges(spark, root, 5).count()

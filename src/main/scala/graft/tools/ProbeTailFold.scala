@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.index.{IncrementalIvf, SegmentStore}
+import graft.streaming.DeltaStream
 
 /** Measure WRITE AMPLIFICATION of the two compaction modes on the same
   * ingest stream — the evidence for the "tail-fold bounds write cost"
@@ -15,10 +16,13 @@ import graft.index.{IncrementalIvf, SegmentStore}
   * small disjoint batches; after every append the maintenance trigger
   * runs in one of two modes:
   *
-  *   - `full`: [[IncrementalIvf.compactIfNeeded]] — the pre-r12 loop
-  *     (fold EVERYTHING into a sibling root + pointer-swap + retire);
-  *   - `tail`: [[IncrementalIvf.tailFoldIfNeeded]] — the manifest fold
-  *     (fold only the tail past the first segment, in place).
+  *   - `full`: fold EVERYTHING into a sibling root + pointer-swap +
+  *     retire;
+  *   - `tail`: the size-tiered manifest fold (fold only the tail past
+  *     the first segment, in place).
+  *
+  * Appends and both triggers are the streaming maintenance step's own,
+  * through its IVF binding (`DeltaStream.ivf`), tagged like a loop's.
   *
   * Bytes written per trigger are measured directly (tree walk before/
   * after; files not present before count their full size), so the
@@ -67,19 +71,16 @@ object ProbeTailFold {
       val area = java.nio.file.Files
         .createTempDirectory(s"graft-wamp-$mode").toString
       var root = s"$area/idx"
+      val ivf = DeltaStream.ivf(spark)
       IncrementalIvf.init(base, centroids, root)
       var bytes = 0L
       var secs = 0.0
       for (i <- 0 until triggers) {
-        IncrementalIvf.append(batch(i), root)
+        ivf.append(batch(i), root, s"batch_$i")
         val before = filesOf(area)
         val t0 = System.nanoTime()
-        if (mode == "full") {
-          val nr = IncrementalIvf.compactIfNeeded(spark, root, maxSegments)
-          if (nr != root) { SegmentStore.retire(root); root = nr }
-        } else {
-          IncrementalIvf.tailFoldIfNeeded(spark, root, maxSegments)
-        }
+        ivf.fold(root, maxSegments, inPlace = mode == "tail", i).foreach { nr =>
+          SegmentStore.retire(root); root = nr }
         secs += (System.nanoTime() - t0) / 1e9
         bytes += filesOf(area).collect {
           case (f, sz) if !before.contains(f) => sz

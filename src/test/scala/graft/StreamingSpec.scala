@@ -1516,7 +1516,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(!edges.exists(e => e._1 == 7L || e._2 == 7L))
 
-    // the default CDC loop is SELF-HEALING (repairAfterDelete): after
+    // the CDC loop is SELF-HEALING (repair before the insert half): after
     // every delete/update-carrying trigger the served graph equals a
     // rebuild over the CURRENT rows — dense ranks, no holes, and no
     // rebuild ever ran. The insert that shared the delete trigger
@@ -1792,5 +1792,62 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(out == Set((1L, 3L, 7.0), (2L, 1L, 7.0))) // state carried across batches
     } finally q.stop()
+  }
+
+  test("maintenance step: a redelivered D+U+I micro-batch is a no-op for every CDC family (version, fan-in and reads unchanged)") {
+    // at-least-once delivery replays the last uncommitted batch under the
+    // SAME batch id; every half of the step (delete, upsert, repair,
+    // insert, fold) must find its tag committed and change nothing —
+    // driven directly through the one step the three CDC loops share
+    import graft.index.{IncrementalBm25, IncrementalIvf, IncrementalKnn, SegmentFamily, TfIdfGraphIndex}
+    val docs = graft.tables.Tables.documents(spark, Sf0001)
+      .select(col("doc_id"), col("text")).where(col("doc_id") < 60)
+    val emb = spark.read.parquet(s"$Sf0001/embeddings.parquet")
+      .where(col("vec_id") < 120)
+      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
+    def root(name: String) =
+      java.nio.file.Files.createTempDirectory(s"graft-replay-$name").toString + "/i"
+    def textBatch = Seq(("D", 2L, "", 0L), ("U", 6L, "zzreplay data", 1L),
+      ("I", 9001L, "zzreplay data query", 2L)).toDF("op", "doc_id", "text", "seq")
+    def vec(id: Long) = emb.where(col("vec_id") === id).head().getSeq[Float](1)
+    val vecBatch = Seq(("D", 6L, Seq.empty[Float], 0L), ("U", 10L, vec(12L), 1L),
+        ("I", 9001L, vec(13L), 2L)).toDF("op", "vec_id", "embedding", "seq")
+      .select(col("op"), col("vec_id"),
+        col("embedding").cast("array<float>").as("embedding"), col("seq"))
+    val centroids = emb.where(col("vec_id") < 10)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val qv = emb.where(col("vec_id") === 0L).select(col("embedding").as("qvec"))
+
+    val bmRoot = root("bm25")
+    IncrementalBm25.init(docs, "doc_id", "text", bmRoot, numFiles = 1)
+    val ivfRoot = root("ivf")
+    IncrementalIvf.init(emb, centroids, ivfRoot)
+    val knnRoot = root("knn")
+    val dense = TfIdfGraphIndex.embedDocsDense(spark, Sf0001, docs)
+    IncrementalKnn.init(dense, dense.where(col("vec_id") < 10)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")), knnRoot, 3, 5)
+
+    val cases: Seq[(String, DeltaStream.Target, String,
+        org.apache.spark.sql.DataFrame, () => Seq[org.apache.spark.sql.Row])] = Seq(
+      ("bm25", DeltaStream.bm25(spark), bmRoot, textBatch, () => IncrementalBm25
+        .topK(spark, bmRoot, "doc_id", Seq("data", "query", "zzreplay"), 50)
+        .collect().toSeq),
+      ("ivf", DeltaStream.ivf(spark), ivfRoot, vecBatch, () => IncrementalIvf
+        .topK(spark, ivfRoot, qv, 3, 10).collect().toSeq),
+      ("knn", DeltaStream.knn(spark, 3, 5, Some(Sf0001)), knnRoot, textBatch,
+        () => IncrementalKnn.edges(spark, knnRoot, 5).collect().toSeq))
+    for ((name, target, r, batch, read) <- cases) {
+      val fam: SegmentFamily = target.family
+      val v0 = fam.version(r)
+      def step() = DeltaStream.maintain(target,
+        DeltaStream.Changelog(Some("seq")), batch, 1L, r, Int.MaxValue)
+      step()
+      val (v1, f1, hits1) = (fam.version(r), fam.fanIn(r), read())
+      assert(v1 > v0 && hits1.nonEmpty, s"$name: the batch did not apply")
+      step() // redelivery: same batch, same batch id
+      assert(fam.version(r) == v1, s"$name: version moved on replay")
+      assert(fam.fanIn(r) == f1, s"$name: fan-in moved on replay")
+      assert(read() == hits1, s"$name: reads changed on replay")
+    }
   }
 }
